@@ -25,12 +25,15 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: selection is a PURE MAP — the gram-hash array, the
   * sliding minima and the distinct all happen inside each document's
-  * own row via higher-order array functions (`transform` / `slice` /
-  * `array_min` / `array_distinct`), so the per-document work never
-  * leaves its input partition and the only output is the ~2/(w+1)-dense
-  * fingerprint explode. No window shuffle, no doc-wide sort: at 100 TB
-  * the selection cost is one scan. The pair join is an inverted index
-  * on fingerprint value with hot buckets CAPPED (a fingerprint shared
+  * own row in the native [[Winnow60]] expression (one byte pass, inside
+  * whole-stage codegen), so the per-document work never leaves its input
+  * partition and the only output is the ~2/(w+1)-dense fingerprint
+  * explode. The higher-order-function spelling (`transform` / `slice` /
+  * `array_min` / `array_distinct`, [[fingerprintsFormula]]) remains only
+  * as the oracle's shape and the parity surface for [[Winnow60]]. No
+  * window shuffle, no doc-wide sort: at 100 TB the selection cost is
+  * one scan. The pair join is an inverted index on fingerprint value
+  * with hot buckets CAPPED (a fingerprint shared
   * by > maxBucket documents is ecosystem boilerplate — a license
   * header — whose O(n²) pair explosion drowns the signal; same policy
   * as [[MinHashLsh]] LSH buckets and [[Jaccard]]). Nothing is

@@ -14,7 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native Catalyst expression for the winnowing selection — the cost
   * center of the exact-substring dedup family ([[Winnow.fingerprints]]).
   *
-  * Semantically identical to the functions-only spelling
+  * Semantically identical, up to NULL input (below), to the
+  * functions-only spelling
   * {{{
   *   hs  = transform(sequence(1, length(t) - k + 1),
   *                   i -> graft_hash60(substr(t, i, k)))          // if length >= k
@@ -31,8 +32,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * a monotone deque (O(g) amortized, no allocation per window). Dedup
   * preserves first-occurrence order exactly like `array_distinct`.
   *
+  * One difference: a NULL text gives a NULL array here, where the
+  * formula's CASE guards give an empty array. The two agree after
+  * `explode` (no rows either way), and [[Winnow.fingerprints]] only
+  * ever explodes the result. The array is declared
+  * `containsNull = false`, so the exploded `fp` column is non-nullable.
+  *
   * Bit-equality with the formula (including multi-byte code points,
-  * under-k and under-w edge cases) is pinned by `WinnowNativeSpec`.
+  * under-k, under-w and null-text edge cases) is pinned by
+  * `WinnowNativeSpec`.
   * Registered as SQL function `graft_winnow60(text, k, w)` via
   * [[GraftExtensions]]; `k` and `w` must be literals.
   */

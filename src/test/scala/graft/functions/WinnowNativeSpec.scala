@@ -11,7 +11,7 @@ import graft.SparkSpec.spark.implicits._
   * order — to the functions-only formula it replaces
   * ([[Winnow.fingerprintsFormula]]: transform/substr gram hashes,
   * slice/array_min window minima, array_distinct), over ASCII, unicode,
-  * repetition-heavy and under-k/under-w edge documents.
+  * repetition-heavy, under-k/under-w and null-text edge documents.
   */
 final class WinnowNativeSpec extends SparkSpec {
 
@@ -39,7 +39,10 @@ final class WinnowNativeSpec extends SparkSpec {
     (5L, "élève 中文 😀 multibyte content stretching past the gram size"),
     (6L, "exactly-k-plus-w-minus-one!"),  // boundary-length doc
     (7L, "ab ab ab ab ab ab ab ab ab ab ab ab ab ab"), // periodic
-    (8L, (1 to 40).map(i => s"w$i").mkString(" "))
+    (8L, (1 to 40).map(i => s"w$i").mkString(" ")),
+    // null text: native gives a NULL array, the formula an empty one;
+    // after explode both select no rows
+    (9L, null: String)
   ).toDF("doc_id", "text")
 
   test("native winnowing equals the formula on edge documents (k/w grid)") {
@@ -62,6 +65,15 @@ final class WinnowNativeSpec extends SparkSpec {
       .toDF("doc_id", "text")
     check(docs, 8, 4)
     check(docs, 20, 8)
+  }
+
+  test("a null text selects no fingerprints, and fp is never null") {
+    val native = Winnow.fingerprints(edgeDocs, "doc_id", "text", 8, 4)
+    assert(native.filter(col("doc_id") === 9L).isEmpty)
+    // the expression's array is declared containsNull = false, so the
+    // exploded fp is non-nullable and a join on fp infers no
+    // isnotnull(fp) filter (the q_substring_pairs plan golden relies on it)
+    assert(!native.schema("fp").nullable, native.schema.treeString)
   }
 
   test("the native expression participates in whole-stage codegen") {
