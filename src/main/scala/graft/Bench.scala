@@ -1,9 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent}
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line {"metric":...,"queries":{name:sec,...}}.
+  * prints ONE JSON line {"metric":...,"queries":{name:sec,...}}, then a
+  * short summary line.
   * local[32] + 32 shuffle partitions per the driver contract; a warm-up pass
   * on sf0.001 amortizes codegen/classload so per-query numbers measure the
   * plan, not JIT.
@@ -38,7 +48,7 @@ object Bench {
   /** The driver-contract JSON line. `value` sums only SUCCESSFUL queries —
     * failures contribute -1 entries plus `failed`/`errors`, never time.
     * `batches` (micro-batches a query's streaming replays executed, from
-    * the StreamingQueryListener) attributes a slow streaming row to the
+    * [[BatchCounter]]) attributes a slow streaming row to the
     * operator vs the replay harness without re-deriving it: seconds up
     * with batches flat = the operator; both up = the harness grew.
     */
@@ -56,6 +66,16 @@ object Bench {
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n_batches":$nb,"failed":$nFail,"errors":$errs,"sf":"$sfDir"}"""
   }
 
+  /** The last stdout line: at most 200 bytes whatever the row count, so a
+    * tail-truncated capture still carries the headline. The full line is
+    * in the artifact it names.
+    */
+  def renderSummary(results: Seq[(String, Double, Option[String])]): String = {
+    val total = results.collect { case (_, v, None) => v }.sum
+    val nFail = results.count(_._3.isDefined)
+    s"""{"total":${JsonLine.num(total)},"failed":$nFail,"n":${results.size},"artifact":"BENCH_RESULT.json"}"""
+  }
+
   /** Per-query wall-clock ceilings, `name -> seconds` (+ optional
     * "total"). `"sf1"` loads the shipped sf1 endurance budget
     * (resources/graft/sf1_budgets.properties); anything else is a
@@ -71,7 +91,6 @@ object Bench {
               "classpath — packaging problem, not a budget pass"))
       else new java.io.FileInputStream(spec)
     try props.load(in) finally in.close()
-    import scala.jdk.CollectionConverters._
     props.asScala.map { case (k, v) => k -> v.trim.toDouble }.toMap
   }
 
@@ -99,6 +118,23 @@ object Bench {
     perQuery ++ total
   }
 
+  /** The exit gate both harnesses share. `budgetSpec` "sf1" or a
+    * properties path arms the endurance budgets — ceilings breached ->
+    * loud exit 3, never silent drift; empty or "off" disarms them. Any
+    * failed query then exits `failedRc`, so rc=0 never hides breakage.
+    */
+  def exitGate(results: Seq[(String, Double, Option[String])],
+      budgetSpec: Option[String], failedRc: Int): Unit = {
+    budgetSpec.filter(s => s.nonEmpty && s != "off").foreach { spec =>
+      val violations = checkBudgets(results, loadBudgets(spec))
+      if (violations.nonEmpty) {
+        violations.foreach(v => System.err.println(s"[budget] $v"))
+        sys.exit(3)
+      }
+    }
+    if (results.exists(_._3.isDefined)) sys.exit(failedRc)
+  }
+
   /** Writes the one-line bench JSON to BENCH_RESULT.json plus
     * BENCH_RESULT_<sfName>_c<cpus>.json (so the 32- and 8-core runs of the
     * same SF don't clobber each other). Root defaults to the working
@@ -116,10 +152,84 @@ object Bench {
         java.nio.file.Files.write(p,
           (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
         ()
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] could not write $f: ${e.getMessage}")
       }
     }
+  }
+
+  /** Micro-batches per bench row, read off the SparkContext's shared
+    * listener bus. Every session's streaming events reach that bus —
+    * the memory-sink rows start on a per-start cloned session
+    * (`StreamConf.scoped`), whose `spark.streams` listeners the root
+    * session never sees.
+    *
+    * The bus is async, so counting by time window would bleed a row's
+    * LAST batch into the next row. Instead each streaming run is OWNED
+    * by the row current when its start event arrives (the bus is FIFO
+    * per query: start precedes every progress event), and progress
+    * counts against the owner whenever it arrives. `settle` drains the
+    * bus before the row changes, so a start event delivered late still
+    * lands on the row that started it.
+    */
+  final class BatchCounter extends SparkListener {
+    @volatile var row: String = ""
+    private val runOwner = new ConcurrentHashMap[UUID, String]()
+    private val byRow = new ConcurrentHashMap[String, AtomicLong]()
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: QueryStartedEvent => runOwner.put(s.runId, row); ()
+      case p: QueryProgressEvent =>
+        val owner = runOwner.get(p.progress.runId)
+        if (owner != null && owner.nonEmpty)
+          byRow.computeIfAbsent(owner, _ => new AtomicLong).incrementAndGet()
+        ()
+      case _ =>
+    }
+
+    def settle(spark: SparkSession): Unit =
+      try GraftSqlBridge.drainListenerBus(spark.sparkContext, 10000L)
+      catch { case e: java.util.concurrent.TimeoutException =>
+        System.err.println(s"[bench] listener bus not drained: ${e.getMessage}") }
+
+    def counts: Map[String, Long] =
+      byRow.asScala.map { case (k, v) => k -> v.get() }.toMap
+  }
+
+  /** The measuring loop shared with [[EnduranceBench]]: an untimed
+    * warm-up of every name on `warmupDir` (absorbs JIT/codegen, one-time
+    * fixture staging and the page cache; failures are logged, and only
+    * NonFatal ones survive — a swallowed OOM would leave the timed loop
+    * measuring a degraded JVM), then each name timed on `dataDir` from a
+    * clean slate. Returns `(name, sec, error)` in `names` order plus the
+    * micro-batches each row's streams ran.
+    */
+  def measure(spark: SparkSession, names: Seq[String], dataDir: String,
+      warmupDir: String): (Seq[(String, Double, Option[String])], Map[String, Long]) = {
+    names.foreach { n =>
+      try { SparkEntry.queries(n)(spark, warmupDir).count(); () }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] warmup $n failed: ${e.getMessage}") }
+    }
+    graft.core.CachePins.releaseAll()
+    spark.catalog.clearCache()
+    val batches = new BatchCounter
+    spark.sparkContext.addSparkListener(batches)
+    // warm-up streams still queued on the bus land on row "", uncounted
+    batches.settle(spark)
+    try {
+      val results = names.map { name =>
+        System.gc()
+        batches.row = name
+        val (sec, err) = runOne(spark, SparkEntry.queries(name), dataDir)
+        err.foreach(m => System.err.println(s"[bench] $name failed: $m"))
+        batches.settle(spark)
+        graft.core.CachePins.releaseAll()
+        spark.catalog.clearCache()
+        (name, sec, err)
+      }
+      (results, batches.counts)
+    } finally spark.sparkContext.removeSparkListener(batches)
   }
 
   def main(args: Array[String]): Unit = {
@@ -138,68 +248,18 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     // JIT/codegen warm-up on the smallest SF
-    names.foreach { n =>
-      try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => }
-    }
-    spark.catalog.clearCache()
-    // micro-batch attribution: the listener bus is async, so counting by
-    // time window would bleed a query's LAST batch into the next row
-    // under delivery lag. Instead each streaming run is OWNED by the
-    // bench query current at its start event (the bus is FIFO per query:
-    // start precedes every progress event), and progress events count
-    // against the owner no matter when they arrive.
-    val currentName = new java.util.concurrent.atomic.AtomicReference[String]("")
-    val runOwner = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
-    val byName = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    spark.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = {
-          runOwner.put(e.runId, currentName.get()); ()
-        }
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-          val owner = runOwner.get(e.progress.runId)
-          if (owner != null && owner.nonEmpty)
-            byName.computeIfAbsent(owner,
-              _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
-          ()
-        }
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      })
-    val results = names.map { name =>
-      System.gc()
-      currentName.set(name)
-      val (sec, err) = runOne(spark, SparkEntry.queries(name), sfDir)
-      graft.core.CachePins.releaseAll()
-      spark.catalog.clearCache()
-      (name, sec, err)
-    }
-    currentName.set("")
-    // drain stragglers once, after the whole run (attribution no longer
-    // depends on this — late events still land on their owner)
-    Thread.sleep(200)
-    import scala.jdk.CollectionConverters._
-    val batches = byName.asScala.map { case (k, v) => k -> v.get() }.toMap
+    val (results, batches) =
+      measure(spark, names, sfDir, warmupDir = "/root/testdata/sf0.001")
     val json = renderJson(results, sfDir, batches)
     // Persist the driver-contract line as an artifact: stdout capture is
     // tail-truncated by some harnesses (the full line is ~10 KB), so the
     // identical bytes also land in BENCH_RESULT.json at the repo root and
-    // in a per-SF copy that survives a subsequent lower-core re-run.
+    // in a per-SF copy that survives a subsequent lower-core re-run; the
+    // short summary line comes last so a truncated tail still carries it.
     writeResultArtifacts(json, sfDir)
     println(json)
+    println(renderSummary(results))
     spark.stop()
-    // SPARK_GRAFT_BUDGETS=sf1 (or a properties path) arms the endurance
-    // gate: ceilings breached -> loud nonzero exit, never silent drift
-    sys.env.get("SPARK_GRAFT_BUDGETS").foreach { spec =>
-      val violations = checkBudgets(results, loadBudgets(spec))
-      if (violations.nonEmpty) {
-        violations.foreach(v => System.err.println(s"[budget] $v"))
-        sys.exit(3)
-      }
-    }
-    if (results.exists(_._3.isDefined)) sys.exit(2)
+    exitGate(results, sys.env.get("SPARK_GRAFT_BUDGETS"), failedRc = 2)
   }
 }

@@ -104,35 +104,13 @@ object EnduranceBench {
     // One untimed pass at `out` absorbs both plus the page cache, so the
     // timed loop measures warm steady state — the 100 TB-relevant number
     // — and per-query ratios are order-independent.
-    names.foreach { n =>
-      // NonFatal only, and loudly: a swallowed OOM/linkage error would
-      // leave the timed loop measuring a silently degraded JVM
-      try { SparkEntry.queries(n)(spark, out).count(); () }
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[endurance] warmup $n failed: ${e.getMessage}")
-      }
-    }
-    graft.core.CachePins.releaseAll()
-    spark.catalog.clearCache()
-    var failures = 0
-    val results = names.map { name =>
-      System.gc()
-      // same failure honesty as Bench: -1, never a fail-fast elapsed time
-      val (sec, err) = Bench.runOne(spark, SparkEntry.queries(name), out)
-      err.foreach { m =>
-        failures += 1
-        System.err.println(s"[endurance] $name failed: $m")
-      }
-      graft.core.CachePins.releaseAll()
-      spark.catalog.clearCache()
-      name -> sec
-    }
-    val qs = results.map { case (k, v) =>
+    val (results, _) = Bench.measure(spark, names, out, warmupDir = out)
+    val qs = results.map { case (k, v, _) =>
       JsonLine.str(k) + ":" + JsonLine.num(v) }.mkString("{", ",", "}")
     // successes only: a -1 failure sentinel must never subtract from the
     // headline number (it still shows per-query and in `failures`)
-    val total = results.collect { case (_, v) if v >= 0 => v }.sum
+    val total = results.collect { case (_, v, None) => v }.sum
+    val failures = results.count(_._3.isDefined)
     println(s"""{"metric":"endurance_total","value":$total,"unit":"sec",""" +
       s""""gen_sec":${JsonLine.num(genSec, 1)},"failures":$failures,"order_seed":$seed,""" +
       s""""queries":$qs,"sf":"sf1 (10x sf0.1)"}""")
@@ -140,17 +118,7 @@ object EnduranceBench {
     // the sf1 endurance BUDGET GATE (on unless explicitly disabled —
     // this main exists to catch scale regressions): heavy-block
     // ceilings + suite total from resources/graft/sf1_budgets.properties
-    val budgetSpec = sys.env.getOrElse("SPARK_GRAFT_BUDGETS", "sf1")
-    if (budgetSpec.nonEmpty && budgetSpec != "off") {
-      val violations = Bench.checkBudgets(
-        results.map { case (k, v) =>
-          (k, v, if (v < 0) Some("failed") else None) },
-        Bench.loadBudgets(budgetSpec))
-      if (violations.nonEmpty) {
-        violations.foreach(v => System.err.println(s"[budget] $v"))
-        sys.exit(3)
-      }
-    }
-    if (failures > 0) sys.exit(1)
+    Bench.exitGate(results,
+      Some(sys.env.getOrElse("SPARK_GRAFT_BUDGETS", "sf1")), failedRc = 1)
   }
 }

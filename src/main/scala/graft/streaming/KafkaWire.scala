@@ -252,25 +252,23 @@ object KafkaWire {
     private val live =
       java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
 
-    def start(): Server = {
-      val acceptor = new Thread(() => {
-        while (running) {
-          try {
-            val sock = server.accept()
-            live.add(sock)
-            val t = new Thread(() => serve(sock))
-            t.setDaemon(true)
-            t.start()
-          } catch {
-            case _: Throwable if !running => // closed
-            case e: Throwable => log.warn(s"kafka-wire accept failed: $e")
-          }
+    private val acceptor = new Thread(() => {
+      while (running) {
+        try {
+          val sock = server.accept()
+          live.add(sock)
+          val t = new Thread(() => serve(sock))
+          t.setDaemon(true)
+          t.start()
+        } catch {
+          case _: Throwable if !running => // closed
+          case e: Throwable => log.warn(s"kafka-wire accept failed: $e")
         }
-      })
-      acceptor.setDaemon(true)
-      acceptor.start()
-      this
-    }
+      }
+    })
+    acceptor.setDaemon(true)
+
+    def start(): Server = { acceptor.start(); this }
 
     private def serve(sock: Socket): Unit = {
       sock.setTcpNoDelay(true)
@@ -393,6 +391,11 @@ object KafkaWire {
     override def close(): Unit = {
       running = false
       server.close()
+      // an accept racing the close can still return a live connection,
+      // and the listening socket stays open until that accept returns:
+      // wait for the acceptor, so the port refuses once close() returns
+      // and every socket it handed out is in `live`
+      acceptor.join()
       live.forEach(s => try s.close() catch { case _: Throwable => () })
       live.clear()
       // release this instance's log and replication channels — servers

@@ -1,11 +1,12 @@
 package org.apache.spark.sql
 
-/** Minimal bridge to two `private[sql]` members of Spark's classic API,
-  * used by [[graft.streaming.StreamConf]] to give every streaming query
-  * start its OWN SparkSession (shared SparkContext + shared state, cloned
-  * session conf) instead of temporarily mutating the caller's session
-  * conf — the r10-audited residual window where a concurrently-planned
-  * batch query could observe the streaming shuffle width.
+/** Minimal bridge to Spark-private members. Two `private[sql]` members of
+  * Spark's classic API let [[graft.streaming.StreamConf]] give every
+  * streaming query start its OWN SparkSession (shared SparkContext +
+  * shared state, cloned session conf) instead of temporarily mutating
+  * the caller's session conf — the r10-audited residual window where a
+  * concurrently-planned batch query could observe the streaming shuffle
+  * width.
   *
   * Why a bridge instead of public API: `newSession()` starts from the
   * INITIAL conf and would silently drop runtime conf set after startup
@@ -33,4 +34,13 @@ object GraftSqlBridge {
     classic.Dataset[T](to.asInstanceOf[classic.SparkSession],
       cd.queryExecution.logical)(cd.encoder)
   }
+
+  /** Blocks until every event already posted to `sc`'s listener bus has
+    * reached its listeners; throws `TimeoutException` after `timeoutMs`.
+    * `graft.Bench.BatchCounter` drains between bench rows so that an
+    * asynchronously delivered streaming start lands on the row that
+    * started it.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 }

@@ -88,4 +88,35 @@ class BenchSpec extends SparkSpec {
     // best-effort contract: an unwritable root must not throw
     Bench.writeResultArtifacts(json, "/data/sf0.1", "/nonexistent-dir/nope")
   }
+
+  test("the summary line parses and fits in 200 bytes, even with 204 failures") {
+    val failing = (1 to 204).map(i =>
+      (f"q_row_$i%03d", -1.0, Some("x" * 300)))
+    Seq(failing, Seq(("q_ok", 1234567.25, Option.empty[String]))).foreach { rs =>
+      val line = Bench.renderSummary(rs)
+      assert(line.getBytes("UTF-8").length <= 200, line)
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+      assert(node.get("total").isNumber && node.get("n").asInt == rs.size, line)
+      assert(node.get("failed").asInt == rs.count(_._3.isDefined), line)
+      assert(node.get("artifact").asText == "BENCH_RESULT.json", line)
+    }
+  }
+
+  test("n_batches counts a memory-sink stream started on a cloned session") {
+    implicit val sq = spark.sqlContext
+    import SparkSpec.spark.implicits._
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
+    input.addData(1L, 2L, 3L)
+    val batches = new Bench.BatchCounter
+    spark.sparkContext.addSparkListener(batches)
+    try {
+      batches.row = "q_clone"
+      // StreamConf.scoped starts this query on a per-start clone of `spark`
+      val out = graft.queries.StreamSupport.runToMemorySink(spark,
+        input.toDS().groupBy("value").count())(_.processAllAvailable())
+      assert(out.count() == 3)
+      batches.settle(spark)
+      assert(batches.counts.getOrElse("q_clone", 0L) > 0, batches.counts)
+    } finally spark.sparkContext.removeSparkListener(batches)
+  }
 }

@@ -107,4 +107,8 @@ class StreamConfSpec extends SparkSpec {
     assert(re.groupBy("k").agg(sum("v")).collect().map(r =>
       (r.getString(0), r.getLong(1))).toSet == Set(("a", 3L), ("b", 3L)))
   }
+
+  test("the configured checkpoint file manager class loads") {
+    Class.forName(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass"))
+  }
 }
