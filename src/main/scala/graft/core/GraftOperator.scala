@@ -23,10 +23,14 @@ import graft.streaming.{AttributeLogFamily, BlobLogFamily,
   *
   * Storage URIs resolve to paths: `file:///x` directly, `inmem://x` to a
   * session-scoped temp dir (the test fixture storage, reference
-  * InMemStorage).
+  * InMemStorage). The default temp dir is created on the first `inmem://`
+  * resolve, not per operator, and deleted when the JVM exits.
   */
 final class GraftOperator(val spark: SparkSession, val repo: Repository,
-    tmpRoot: String = java.nio.file.Files.createTempDirectory("graft-op-").toString) {
+    tmpRoot: => String =
+      org.apache.spark.sql.GraftSqlBridge.tempDirDeletedAtExit("graft-op-")) {
+
+  private lazy val inmemRoot = tmpRoot
 
   private val familyCache = collection.concurrent.TrieMap.empty[String, AttributeLogFamily]
 
@@ -36,7 +40,7 @@ final class GraftOperator(val spark: SparkSession, val repo: Repository,
     val (scheme, rest) = (storageUri.substring(0, i), storageUri.substring(i + 3))
     scheme match {
       case "file"  => rest
-      case "inmem" => s"$tmpRoot/${rest.replaceAll("[^A-Za-z0-9._-]", "_")}"
+      case "inmem" => s"$inmemRoot/${rest.replaceAll("[^A-Za-z0-9._-]", "_")}"
       // object stores / DFS resolve through the Hadoop filesystem layer —
       // the URI passes straight to the parquet reader (reference io-blob /
       // io-gcloud-storage / io-hdfs bindings)

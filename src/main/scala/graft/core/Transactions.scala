@@ -199,7 +199,9 @@ final class TransactionCoordinator(family: AttributeLogFamily,
             val seq = (since.map(_._1) :+ beginSeq(i)).max + 1
             ledger ++= writes(i).map(e => (seq, e.key, e.attribute))
             accepted ++= writes(i).map(_.copy(seqId = seq))
-            logicalMax = math.max(logicalMax, seq)
+            // the sequential commit persists nothing for an empty write
+            // set, so a later begin must not see its seq either
+            if (writes(i).nonEmpty) logicalMax = math.max(logicalMax, seq)
             Metrics.inc("graft.transactions.committed")
             outcomes += ScheduleOutcome(i, Right(seq))
           }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -51,10 +50,17 @@ object IvfStore {
     * [[IvfStore.removeWhere]] from a different session than the writer's.
     */
   def open(spark: SparkSession, path: String): IvfStore =
-    new IvfStore(spark, path, loadCentroids(spark, path).getOrElse(
+    new IvfStore(spark, path, loadCentroids(handle(spark, path)).getOrElse(
       throw new IllegalStateException(
         s"no persisted quantizer at $path/$CentroidsFile — not an IvfStore " +
           "(or written by a pre-quantizer-persistence version)")))
+
+  /** The cell layout [[IvfStore]] and [[PqStore]] share: partitioned by
+    * coarse cell, vec_id-sorted within.
+    */
+  private[functions] def handle(spark: SparkSession,
+      path: String): StoreManifest.Handle =
+    StoreManifest.Handle(spark, path, "cell", Seq("vec_id"))
 
   private[functions] val CentroidsFile = "_quantizer"
 
@@ -63,27 +69,16 @@ object IvfStore {
     * assignment replay with centroids off by one ulp could route a
     * boundary vector to a different cell than the stored layout.
     */
-  private[functions] def saveCentroids(spark: SparkSession, path: String,
-      centroids: Array[Array[Double]], file: String = CentroidsFile): Unit = {
-    val text = centroids.map(_.map(d =>
+  private[functions] def centroidsFile(
+      centroids: Array[Array[Double]]): (String, String) =
+    CentroidsFile -> centroids.map(_.map(d =>
         java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(d)))
       .mkString(",")).mkString("\n")
-    val p = new Path(s"$path/$file")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-  }
 
-  private[functions] def loadCentroids(spark: SparkSession,
-      path: String, file: String = CentroidsFile): Option[Array[Array[Double]]] = {
-    val p = new Path(s"$path/$file")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+  private[functions] def loadCentroids(
+      store: StoreManifest.Handle): Option[Array[Array[Double]]] =
+    store.readSide(CentroidsFile).map { text =>
+      val p = s"${store.path}/$CentroidsFile"
       // a corrupt quantizer must refuse LOUDLY with its provenance: the
       // centroids are the store's layout, and serving through garbage
       // would probe the wrong directories silently (a raw
@@ -100,9 +95,8 @@ object IvfStore {
           c.nonEmpty && c.length == parsed.head.length),
         s"corrupt persisted quantizer at $p: ragged or empty centroid " +
           "rows — restore the file or rebuild with write()")
-      Some(parsed)
+      parsed
     }
-  }
 }
 
 final class IvfStore(spark: SparkSession, val path: String,
@@ -149,12 +143,10 @@ final class IvfStore(spark: SparkSession, val path: String,
     val d = col("embedding").cast("array<double>")
     emb.select(col("vec_id"), col("embedding"),
         normUdf(d).as("norm"), cellUdf(d).as("cell"))
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("vec_id"))
   }
 
-  /** The shared manifest-store plumbing, bound to this store's layout. */
-  private val store = StoreManifest.Handle(spark, path, "cell")
+  /** The shared manifest-store protocol, bound to this store's layout. */
+  private val store = IvfStore.handle(spark, path)
 
   private def manifest(op: String): StoreManifest.Manifest = store.resolve(op)
 
@@ -167,25 +159,15 @@ final class IvfStore(spark: SparkSession, val path: String,
     * the probe logic never visits. [[append]]/[[removeWhere]] refuse a
     * handle whose centroids drifted from the persisted set.
     */
-  def write(emb: DataFrame): Unit = {
-    val assigned = indexed(emb)
-    // FORCED static overwrite: under a session's dynamic
-    // partitionOverwriteMode a rebuild would keep untouched cells' old
-    // files AND old manifests whose files the overwrite deleted —
-    // readers FileNotFound mid-scan, publishInitial gen-collision
-    assigned.write.partitionBy("cell").mode("overwrite")
-      .option("partitionOverwriteMode", "static").parquet(path)
-    IvfStore.saveCentroids(spark, path, centroids)
-    store.publishInitial(store.readSchema(assigned.schema,
-      org.apache.spark.sql.types.IntegerType))
-    ()
-  }
+  def write(emb: DataFrame): Unit =
+    store.write(indexed(emb), org.apache.spark.sql.types.IntegerType,
+      IvfStore.centroidsFile(centroids))
 
   /** Drift guard for every incremental mutation: the handle's centroids
     * must be bit-identical to the persisted quantizer.
     */
   private def requireQuantizerMatch(op: String): Unit = {
-    val stored = IvfStore.loadCentroids(spark, path).getOrElse(
+    val stored = IvfStore.loadCentroids(store).getOrElse(
       throw new IllegalStateException(
         s"$op: no persisted quantizer at $path — write() the store first"))
     require(stored.length == centroids.length &&
@@ -255,45 +237,19 @@ final class IvfStore(spark: SparkSession, val path: String,
     requireQuantizerMatch("appendIdempotent")
     val m = manifest("appendIdempotent")
     requireDeltaCompatible("appendIdempotent", m, delta)
-    // persisted across the mutation's actions: the dup-count agg and
-    // the final write must see the SAME rows (a non-deterministic
-    // source re-evaluated per action could pass validation with one row
-    // set and commit another), and the cell UDF runs once per row, not
-    // once per action
-    val assigned = indexed(delta).persist()
-    try {
-      val Array(n, d) = assigned
-        .agg(count(lit(1)), countDistinct(col("vec_id")))
-        .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
-      require(n == d,
-        s"appendIdempotent: delta carries ${n - d} duplicate vec_ids — two " +
-          "embeddings for one id is a data error (removeWhere + append to " +
-          "re-embed)")
-      if (n == 0) return
-      val existing = storeDf(m).select("vec_id")
-      store.commitSwap(m,
-        assigned.join(existing, Seq("vec_id"), "left_anti")
-          .repartition(col("cell"))
-          .sortWithinPartitions(col("cell"), col("vec_id")),
-        Seq.empty)
-      ()
-    } finally { assigned.unpersist(); () }
+    // the pinned rows are the ASSIGNED projection: the cell UDF runs once
+    // per row, not once per action
+    store.appendNew(m, "appendIdempotent", "vec_id", indexed(delta),
+      _ => storeDf(m).select("vec_id"), identity)
   }
 
   /** Maintain the store from a streaming embedding feed — each
-    * micro-batch is one [[appendIdempotent]], so replay after a
-    * checkpoint restart converges instead of duplicating (the
-    * [[graft.randomaccess.BucketedSnapshotStore.replicate]] pattern for
-    * the ANN layout). Caller `.start()`s the returned writer.
+    * micro-batch is one [[appendIdempotent]] (see
+    * [[StoreManifest.replicate]]). Caller `.start()`s the returned writer.
     */
   def replicate(stream: DataFrame, checkpoint: String):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendIdempotent(batch)
-      }
+    StoreManifest.replicate(stream, checkpoint)(appendIdempotent)
 
   /** Incremental removal: drop every stored vector where `pred` is TRUE,
     * rewriting ONLY the cell directories that hold a match. Under SQL
@@ -308,12 +264,8 @@ final class IvfStore(spark: SparkSession, val path: String,
     */
   def removeWhere(pred: org.apache.spark.sql.Column): Unit = {
     requireQuantizerMatch("removeWhere")
-    val m = manifest("removeWhere")
     val matched = coalesce(pred, lit(false))
-    val touched = storeDf(m).filter(matched).select("cell").distinct()
-      .collect().map(_.get(0).toString.toInt).sorted.toSeq
-    if (touched.isEmpty) return
-    swapCells(m, storeDf(m, Some(touched)).filter(!matched), touched)
+    store.rewrite(manifest("removeWhere"), _.filter(matched), _.filter(!matched))
   }
 
   /** Set-removal twin of [[removeWhere]] for an id SET that lives in a
@@ -324,15 +276,9 @@ final class IvfStore(spark: SparkSession, val path: String,
     */
   def removeMatching(ids: DataFrame): Unit = {
     requireQuantizerMatch("removeMatching")
-    val m = manifest("removeMatching")
-    val idSet = ids.select("vec_id")
-    val touched = storeDf(m).join(idSet, Seq("vec_id"), "left_semi")
-      .select("cell").distinct()
-      .collect().map(_.get(0).toString.toInt).sorted.toSeq
-    if (touched.isEmpty) return
-    swapCells(m,
-      storeDf(m, Some(touched)).join(idSet, Seq("vec_id"), "left_anti"),
-      touched)
+    store.rewrite(manifest("removeMatching"),
+      _.join(ids.select("vec_id"), Seq("vec_id"), "left_semi"),
+      _.join(ids.select("vec_id"), Seq("vec_id"), "left_anti"))
   }
 
   /** Re-embedding fold: replace any stored vector whose vec_id appears in
@@ -340,48 +286,19 @@ final class IvfStore(spark: SparkSession, val path: String,
     * and the delta's NEW embeddings decide the new cell assignments (a
     * vector may move cells when its embedding moved).
     *
-    * Both legs land in ONE manifest generation: the swap set is the
-    * union of the cells holding a matched id and the cells the delta
-    * files into, the replacement is (those cells' survivors + the
-    * assigned delta), and a single commitSwap publishes it. A crash at
-    * ANY point therefore leaves either the full old version or the full
-    * new one — never "ids removed, replacements not yet filed" (the
-    * two-generation window the r14 review flagged). The delta is
-    * VALIDATED FIRST (element type, duplicate ids), so every refusal an
-    * upsert can raise fires before anything is staged.
+    * Both legs land in ONE manifest generation
+    * ([[StoreManifest.Handle.upsert]]). The delta is VALIDATED FIRST
+    * (element type, duplicate ids), so every refusal an upsert can raise
+    * fires before anything is staged.
     */
   def upsert(delta: DataFrame): Unit = {
     requireQuantizerMatch("upsert")
     val m = manifest("upsert")
     requireDeltaCompatible("upsert", m, delta)
-    // the dup/row counts run over the ASSIGNED projection, not the raw
-    // delta: that forces the cell UDF (and its dimension guard) over
-    // every row, so a delta that cannot be filed refuses HERE
-    // persisted: five actions touch this projection (dup agg, old/new
-    // cell discovery, survivor anti-join, the staged write) — without
-    // the pin each re-runs the cell UDF over the whole delta, and a
-    // non-deterministic source could remove one row set and file
-    // another
-    val assigned = indexed(delta).persist()
-    try {
-      val Array(n, d) = assigned
-        .agg(count(lit(1)), countDistinct(col("vec_id")))
-        .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
-      require(n == d,
-        s"upsert: delta carries ${n - d} duplicate vec_ids — two embeddings " +
-          "for one id is a data error")
-      if (n == 0) return
-      val idSet = assigned.select("vec_id")
-      val oldCells = storeDf(m).join(idSet, Seq("vec_id"), "left_semi")
-        .select("cell").distinct()
-        .collect().map(_.get(0).toString.toInt)
-      val newCells = assigned.select("cell").distinct()
-        .collect().map(_.get(0).toString.toInt)
-      val touched = (oldCells ++ newCells).distinct.sorted.toSeq
-      val survivors = storeDf(m, Some(touched))
-        .join(idSet, Seq("vec_id"), "left_anti")
-      swapCells(m, survivors.unionByName(assigned), touched)
-    } finally { assigned.unpersist(); () }
+    // the guard runs over the ASSIGNED projection, not the raw delta:
+    // that forces the cell UDF (and its dimension guard) over every row,
+    // so a delta that cannot be filed refuses before anything is staged
+    store.upsert(m, "upsert", "vec_id", indexed(delta))
   }
 
   /** Defragmentation after many [[append]]s: rewrite every cell holding
@@ -392,10 +309,7 @@ final class IvfStore(spark: SparkSession, val path: String,
     */
   def compactCells(maxFilesPerCell: Int = 4): Unit = {
     requireQuantizerMatch("compactCells")
-    val m = manifest("compactCells")
-    val fragmented = store.fragmented(m, maxFilesPerCell).map(_.toInt)
-    if (fragmented.isEmpty) return
-    swapCells(m, storeDf(m, Some(fragmented)), fragmented)
+    store.compact(manifest("compactCells"), maxFilesPerCell)
   }
 
   /** Reclaim files no retained manifest references — garbage stranded by
@@ -475,18 +389,6 @@ final class IvfStore(spark: SparkSession, val path: String,
       .orderBy(col("cos").desc, col("neighbor_id"))
     scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
       .select(col("q_id"), col("rk"), col("neighbor_id"), col("cos"))
-  }
-
-  /** Staged cell swap: replacement rows land as new files, manifest
-    * publish flips the version atomically — see [[StoreManifest]].
-    */
-  private def swapCells(m: StoreManifest.Manifest, replacement: DataFrame,
-      affected: Seq[Int]): Unit = {
-    store.commitSwap(m,
-      replacement.repartition(col("cell"))
-        .sortWithinPartitions(col("cell"), col("vec_id")),
-      affected)
-    ()
   }
 
   /** The cell-pruned read an nProbe query batch performs — files selected

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,16 +17,12 @@ import org.apache.spark.sql.functions._
   *   - doc-membership rows: term NULL, pb = hash60("doc:" + doc_id) %
   *     buckets, (doc_id, dl) — the idempotence claim AND the corpus
   *     statistics source (N, Σdl).
-  * A batch lands through the same [[graft.sources.StoreManifest]]
-  * protocol as the ANN stores: staged files move into the live layout
-  * and become visible in ONE atomic manifest publish over both row
-  * kinds — a crash at any point leaves the previous version serving
-  * completely (membership without postings, or the inverse, can never
-  * be half-visible), concurrent appenders are single-writer enforced
-  * (the raced loser fails loudly and retries against the new
-  * generation), and readers scan exactly the manifest's file list.
-  * [[appendIdempotent]] re-offered after a crash or a streaming replay
-  * converges (membership anti-join, pruned to the delta's doc buckets).
+  * A batch lands through the same [[graft.sources.StoreManifest.Handle]]
+  * protocol as the ANN stores, in ONE atomic manifest publish over both
+  * row kinds — membership without postings, or the inverse, can never
+  * be half-visible. [[appendIdempotent]] re-offered after a crash or a
+  * streaming replay converges (membership anti-join, pruned to the
+  * delta's doc buckets).
   *
   * Doc ids are the index's key contract: `idCol` must be integral
   * (long-castable) and non-null — a null or non-castable id is refused
@@ -54,12 +49,7 @@ final class PostingsStore(spark: SparkSession, val path: String,
 
   import spark.implicits._
 
-  private val LayoutFile = "_layout"
-
-  private val store = graft.sources.StoreManifest.Handle(spark, path, "pb")
-
-  private def fs: org.apache.hadoop.fs.FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val store = PostingsStore.handle(spark, path)
 
   private def termBucket(term: Column): Column =
     pmod(Hash60.column(term), lit(buckets.toLong))
@@ -113,39 +103,17 @@ final class PostingsStore(spark: SparkSession, val path: String,
     posts.unionByName(members)
   }
 
-  private def layout(r: DataFrame): DataFrame =
-    r.repartition(col("pb"))
-      .sortWithinPartitions(col("pb"), col("term"), col("doc_id"))
-
   /** Build (or fully rebuild) the index; persists the bucket layout and
-    * publishes manifest generation 1. The overwrite is FORCED static:
-    * under a session's `partitionOverwriteMode=dynamic` a rebuild would
-    * keep old buckets the new corpus doesn't touch — two corpora
-    * silently merged into one index.
+    * publishes manifest generation 1 ([[graft.sources.StoreManifest.Handle.write]]).
     */
   def write(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): Unit = {
-    layout(rows(tokenized(docs, idCol, textCol)))
-      .write.partitionBy("pb").mode("overwrite")
-      .option("partitionOverwriteMode", "static").parquet(path)
-    val p = new Path(s"$path/$LayoutFile")
-    val out = fs.create(p, true)
-    try out.write(buckets.toString.getBytes("UTF-8")) finally out.close()
-    store.publishInitial(store.readSchema(
-      rows(tokenized(docs.limit(0), idCol, textCol)).schema,
-      org.apache.spark.sql.types.LongType))
-    ()
-  }
+      textCol: String = "text"): Unit =
+    store.write(rows(tokenized(docs, idCol, textCol)),
+      org.apache.spark.sql.types.LongType,
+      PostingsStore.LayoutFile -> buckets.toString)
 
   private def requireLayoutMatch(op: String): Unit = {
-    val p = new Path(s"$path/$LayoutFile")
-    if (!fs.exists(p))
-      throw new IllegalStateException(
-        s"$op: no persisted layout at $p — write() the index first")
-    val in = fs.open(p)
-    val stored =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-      finally in.close()
+    val stored = PostingsStore.storedBuckets(store, op)
     require(stored == buckets,
       s"$op: this handle says $buckets buckets but the index was built " +
         s"with $stored — a mismatched bucket count probes the wrong " +
@@ -154,43 +122,28 @@ final class PostingsStore(spark: SparkSession, val path: String,
   }
 
   /** Restart-safe delta fold: index only the docs the index doesn't
-    * already hold (membership anti-join, pruned to the delta's doc
-    * buckets — O(delta + touched-bucket members), never O(corpus)), in
-    * one atomic manifest publish. A delta carrying the same doc_id
-    * twice is refused loudly; concurrent appenders are single-writer
-    * enforced (the raced loser's publish fails loudly — re-resolve and
-    * retry). Re-indexing a CHANGED document is a deliberate rebuild
-    * concern, not a silent overwrite.
+    * already hold ([[graft.sources.StoreManifest.Handle.appendNew]]; the
+    * membership anti-join is pruned to the delta's doc buckets —
+    * O(delta + touched-bucket members), never O(corpus)). A delta
+    * carrying the same doc_id twice is refused loudly. Re-indexing a
+    * CHANGED document is a deliberate rebuild concern, not a silent
+    * overwrite.
     */
   def appendIdempotent(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     requireLayoutMatch("appendIdempotent")
     val m = store.resolve("appendIdempotent")
-    // pinned: three actions consume this projection (dup-guard agg,
-    // touched-bucket distinct, the staged write) and each would
-    // otherwise re-run the tokenize+guard scan over the delta; the pin
-    // also guarantees validation and the committed write see ONE row
-    // set (same rationale as PqStore.appendIdempotent)
-    val tok = tokenized(docs, idCol, textCol).persist()
-    try {
-      val Array(n, d) = tok.agg(count(lit(1)), countDistinct(col("doc_id")))
-        .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
-      require(n == d, s"appendIdempotent: delta carries ${n - d} duplicate " +
-        "doc_ids — two texts for one id is a data error")
-      if (n == 0) return
-      val withDb = tok.withColumn("__db", docBucket(col("doc_id")))
-      val touched = withDb.select("__db").distinct()
-        .collect().map(_.getLong(0)).sorted
-      val existing = store.scan(m, Some(touched.toSeq))
-        .filter(col("term").isNull).select("doc_id")
-      val fresh = withDb.join(existing, Seq("doc_id"), "left_anti").drop("__db")
-      // a fully-duplicate replay batch stages nothing and publishes an
-      // identical-file-list generation — cheap and bounded by replay
-      // count; pre-checking emptiness would run the anti-join as an EXTRA
-      // action on every append (measured on the store's bench row)
-      store.commitSwap(m, layout(rows(fresh)), Seq.empty)
-      ()
-    } finally { tok.unpersist(); () }
+    // pinned: the tokenize+guard scan runs once for the guard, the
+    // touched-bucket distinct and the staged write
+    store.appendNew(m, "appendIdempotent", "doc_id",
+      tokenized(docs, idCol, textCol),
+      tok => {
+        val touched = tok.select(docBucket(col("doc_id"))).distinct()
+          .collect().map(_.getLong(0)).toSeq
+        store.scan(m, Some(touched)).filter(col("term").isNull)
+          .select("doc_id")
+      },
+      rows)
   }
 
   /** Maintain the index from a streaming document feed; replay after a
@@ -200,12 +153,8 @@ final class PostingsStore(spark: SparkSession, val path: String,
   def replicate(stream: DataFrame, checkpoint: String,
       idCol: String = "doc_id", textCol: String = "text"):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendIdempotent(batch, idCol, textCol)
-      }
+    graft.sources.StoreManifest.replicate(stream, checkpoint)(
+      appendIdempotent(_, idCol, textCol))
 
   /** Corpus statistics (N, Σdl) from the membership rows — compute once
     * per index version and cache in a serving deployment.
@@ -274,17 +223,20 @@ final class PostingsStore(spark: SparkSession, val path: String,
 
 object PostingsStore {
 
+  private val LayoutFile = "_layout"
+
+  private def handle(spark: SparkSession,
+      path: String): graft.sources.StoreManifest.Handle =
+    graft.sources.StoreManifest.Handle(spark, path, "pb", Seq("term", "doc_id"))
+
+  /** The bucket count the index was built with, from its `_layout`. */
+  private def storedBuckets(store: graft.sources.StoreManifest.Handle,
+      op: String): Int =
+    store.readSide(LayoutFile).getOrElse(throw new IllegalStateException(
+      s"$op: no persisted layout at ${store.path}/$LayoutFile — not a " +
+        "PostingsStore; write() the index first")).trim.toInt
+
   /** Open an existing index with its persisted bucket layout. */
-  def open(spark: SparkSession, path: String): PostingsStore = {
-    val p = new Path(s"$path/_layout")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      throw new IllegalStateException(
-        s"no persisted layout at $p — not a PostingsStore")
-    val in = fs.open(p)
-    val buckets =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-      finally in.close()
-    new PostingsStore(spark, path, buckets)
-  }
+  def open(spark: SparkSession, path: String): PostingsStore =
+    new PostingsStore(spark, path, storedBuckets(handle(spark, path), "open"))
 }

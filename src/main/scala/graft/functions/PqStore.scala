@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,8 +26,9 @@ import graft.sources.StoreManifest
   * needs the same restart-safe convergence story as the exact one, or
   * replication to it becomes the pipeline's weak link.
   *
-  * Both quantizers persist WITH the store as exact binary64 bit patterns
-  * (the [[IvfStore]] discipline): the coarse centroids ARE the directory
+  * Every mutation is one [[StoreManifest.Handle]] sequence over the
+  * [[IvfStore]] cell layout. Both quantizers persist WITH the store as
+  * exact binary64 bit patterns: the coarse centroids ARE the directory
   * layout and the codebooks ARE the meaning of every stored byte, so a
   * maintainer must use [[PqStore.open]] — a drifted handle would file
   * vectors into cells the probe logic never visits, or decode bytes
@@ -42,13 +42,8 @@ final class PqStore(spark: SparkSession, val path: String,
 
   import spark.implicits._
 
-  private val CodebooksFile = "_codebooks"
-
-  private def fs: org.apache.hadoop.fs.FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The shared manifest-store plumbing, bound to this store's layout. */
-  private val store = StoreManifest.Handle(spark, path, "cell")
+  /** The shared manifest-store protocol, bound to the cell layout. */
+  private val store = IvfStore.handle(spark, path)
 
   private def manifest(op: String): StoreManifest.Manifest = store.resolve(op)
 
@@ -57,30 +52,18 @@ final class PqStore(spark: SparkSession, val path: String,
 
   /** The encode + coarse-assign projection every ingest path shares:
     * codes from the frozen codebooks, cell from the frozen coarse
-    * quantizer, cell-clustered layout. ONE fused map-only pass
-    * ([[Pq.encodeAssigned]]) — no vec_id self-join, so a delta that
-    * slips duplicate ids past a caller produces two intact rows (like
-    * [[IvfStore]]), never cross-product hybrids pairing one
-    * duplicate's code with the other's cell.
+    * quantizer. ONE fused map-only pass ([[Pq.encodeAssigned]]) — no
+    * vec_id self-join, so a delta that slips duplicate ids past a caller
+    * produces two intact rows (like [[IvfStore]]), never cross-product
+    * hybrids pairing one duplicate's code with the other's cell.
     */
   private def encoded(delta: DataFrame): DataFrame =
     Pq.encodeAssigned(delta, cb, coarse)
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("vec_id"))
 
   /** Encode + assign + persist, and save both quantizers alongside. */
-  def write(emb: DataFrame): Unit = {
-    val enc = encoded(emb)
-    // forced static: dynamic partitionOverwriteMode would merge stale
-    // cells into a rebuild (see IvfStore.write)
-    enc.write.partitionBy("cell").mode("overwrite")
-      .option("partitionOverwriteMode", "static").parquet(path)
-    IvfStore.saveCentroids(spark, path, coarse)
-    saveCodebooks()
-    store.publishInitial(store.readSchema(enc.schema,
-      org.apache.spark.sql.types.IntegerType))
-    ()
-  }
+  def write(emb: DataFrame): Unit =
+    store.write(encoded(emb), org.apache.spark.sql.types.IntegerType,
+      IvfStore.centroidsFile(coarse), PqStore.codebooksFile(cb))
 
   /** Incremental fold: encode a DELTA with the persisted (frozen)
     * quantizers and append into its touched cells — O(delta), no
@@ -104,84 +87,32 @@ final class PqStore(spark: SparkSession, val path: String,
   def appendIdempotent(delta: DataFrame): Unit = {
     requireQuantizerMatch("appendIdempotent")
     val m = manifest("appendIdempotent")
-    // pinned: validation and the committed write must see one row set
-    val cached = delta.persist()
-    try {
-      val Array(n, d) = cached
-        .agg(count(lit(1)), countDistinct(col("vec_id")))
-        .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
-      require(n == d,
-        s"appendIdempotent: delta carries ${n - d} duplicate vec_ids — two " +
-          "embeddings for one id is a data error (upsert to re-embed)")
-      if (n == 0) return
-      val existing = storeDf(m).select("vec_id")
-      val fresh = cached.join(existing, Seq("vec_id"), "left_anti")
-      store.commitSwap(m, encoded(fresh), Seq.empty)
-      ()
-    } finally { cached.unpersist(); () }
+    // pins the RAW delta and encodes only the fresh rows: a replayed
+    // batch pays no PQ encode for the vectors the store already holds
+    store.appendNew(m, "appendIdempotent", "vec_id", delta,
+      _ => storeDf(m).select("vec_id"), encoded)
   }
 
   /** Maintain the compressed copy from a streaming embedding feed — each
-    * micro-batch one [[appendIdempotent]], so checkpoint-restart replay
-    * converges instead of duplicating. Caller `.start()`s the writer.
+    * micro-batch one [[appendIdempotent]] (see
+    * [[StoreManifest.replicate]]). Caller `.start()`s the writer.
     */
   def replicate(stream: DataFrame, checkpoint: String):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendIdempotent(batch)
-      }
+    StoreManifest.replicate(stream, checkpoint)(appendIdempotent)
 
   /** Re-embedding fold: re-encode the delta with the frozen quantizers
-    * and replace any stored code whose vec_id it carries — the delta's
-    * NEW embeddings decide both the new codes and the new cells.
-    *
-    * Both legs land in ONE manifest generation (the [[IvfStore.upsert]]
-    * discipline): swap set = cells holding a matched id ∪ cells the
-    * re-encoded delta files into, replacement = those cells' survivors +
-    * the encoded delta, one commitSwap. A crash at any point leaves the
-    * full old version or the full new one — never "ids removed, codes
-    * not yet re-added". Validation (duplicate ids, encodability) runs
-    * FIRST so a refused upsert leaves the store untouched.
+    * and replace any stored code whose vec_id it carries, in one
+    * generation ([[StoreManifest.Handle.upsert]]) — the delta's NEW
+    * embeddings decide both the new codes and the new cells. The guard
+    * runs over the ENCODED projection, which forces [[Pq.encode]]
+    * (schema resolution + the dimension guard) over every row, so a
+    * delta that cannot be encoded refuses before anything is staged; the
+    * pin keeps the full PQ encode to one pass over the delta.
     */
   def upsert(delta: DataFrame): Unit = {
     requireQuantizerMatch("upsert")
-    val m = manifest("upsert")
-    // the dup/row counts run over the ENCODED projection, not the raw
-    // delta: that forces Pq.encode (schema resolution + the dimension
-    // guard) over every row, so a delta that cannot be encoded refuses
-    // HERE — before anything is staged
-    // persisted: five actions touch this projection, and each would
-    // otherwise re-run the FULL PQ encode (m nearest-centroid searches
-    // per row) over the delta; the pin also guarantees the removal id
-    // set and the filed replacement come from the same row set
-    val enc = encoded(delta).persist()
-    try {
-      val Array(n, d) = enc
-        .agg(count(lit(1)), countDistinct(col("vec_id")))
-        .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
-      require(n == d,
-        s"upsert: delta carries ${n - d} duplicate vec_ids — two embeddings " +
-          "for one id is a data error")
-      if (n == 0) return
-      val idSet = enc.select("vec_id")
-      val oldCells = storeDf(m).join(idSet, Seq("vec_id"), "left_semi")
-        .select("cell").distinct()
-        .collect().map(_.get(0).toString.toInt)
-      val newCells = enc.select("cell").distinct()
-        .collect().map(_.get(0).toString.toInt)
-      val touched = (oldCells ++ newCells).distinct.sorted.toSeq
-      val survivors = storeDf(m, Some(touched))
-        .join(idSet, Seq("vec_id"), "left_anti")
-      store.commitSwap(m,
-        survivors.unionByName(enc)
-          .repartition(col("cell"))
-          .sortWithinPartitions(col("cell"), col("vec_id")),
-        touched)
-      ()
-    } finally { enc.unpersist(); () }
+    store.upsert(manifest("upsert"), "upsert", "vec_id", encoded(delta))
   }
 
   /** Takedown on the COMPRESSED copy: a removed vector must leave every
@@ -193,19 +124,9 @@ final class PqStore(spark: SparkSession, val path: String,
     */
   def removeMatching(ids: DataFrame): Unit = {
     requireQuantizerMatch("removeMatching")
-    val m = manifest("removeMatching")
-    val idSet = ids.select("vec_id")
-    val touched = storeDf(m).join(idSet, Seq("vec_id"), "left_semi")
-      .select("cell").distinct()
-      .collect().map(_.get(0).toString.toInt).sorted.toSeq
-    if (touched.isEmpty) return
-    store.commitSwap(m,
-      storeDf(m, Some(touched))
-        .join(idSet, Seq("vec_id"), "left_anti")
-        .repartition(col("cell"))
-        .sortWithinPartitions(col("cell"), col("vec_id")),
-      touched)
-    ()
+    store.rewrite(manifest("removeMatching"),
+      _.join(ids.select("vec_id"), Seq("vec_id"), "left_semi"),
+      _.join(ids.select("vec_id"), Seq("vec_id"), "left_anti"))
   }
 
   /** Defragmentation after many [[append]]s — fragmentation read off the
@@ -214,15 +135,7 @@ final class PqStore(spark: SparkSession, val path: String,
     */
   def compactCells(maxFilesPerCell: Int = 4): Unit = {
     requireQuantizerMatch("compactCells")
-    val m = manifest("compactCells")
-    val fragmented = store.fragmented(m, maxFilesPerCell).map(_.toInt)
-    if (fragmented.isEmpty) return
-    store.commitSwap(m,
-      storeDf(m, Some(fragmented))
-        .repartition(col("cell"))
-        .sortWithinPartitions(col("cell"), col("vec_id")),
-      fragmented)
-    ()
+    store.compact(manifest("compactCells"), maxFilesPerCell)
   }
 
   /** Reclaim files no retained manifest references (crashed-mutation
@@ -285,26 +198,11 @@ final class PqStore(spark: SparkSession, val path: String,
       .select(col("q_id"), col("rk"), col("neighbor_id"), col("cos"))
   }
 
-  /** Codebooks as text: header `m dsub`, then one line per subspace,
-    * centroids ';'-separated, dimensions as exact binary64 bits in hex
-    * (the [[IvfStore]] bit-exactness rationale, doubled: the codebooks
-    * are the meaning of every stored byte).
-    */
-  private def saveCodebooks(): Unit = {
-    val body = (s"${cb.m} ${cb.dsub}" +:
-      cb.centroids.toSeq.map(_.map(_.map(d =>
-          java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(d)))
-        .mkString(",")).mkString(";"))).mkString("\n")
-    val p = new Path(s"$path/$CodebooksFile")
-    val out = fs.create(p, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
   private def requireQuantizerMatch(op: String): Unit = {
-    val storedCoarse = IvfStore.loadCentroids(spark, path).getOrElse(
+    val storedCoarse = IvfStore.loadCentroids(store).getOrElse(
       throw new IllegalStateException(
         s"$op: no persisted coarse quantizer at $path — write() first"))
-    val storedCb = PqStore.loadCodebooks(spark, path).getOrElse(
+    val storedCb = PqStore.loadCodebooks(store).getOrElse(
       throw new IllegalStateException(
         s"$op: no persisted codebooks at $path — write() first"))
     require(storedCoarse.length == coarse.length &&
@@ -327,45 +225,49 @@ object PqStore {
     * safe maintenance/serving handle across sessions.
     */
   def open(spark: SparkSession, path: String): PqStore = {
-    val coarse = IvfStore.loadCentroids(spark, path).getOrElse(
+    val store = IvfStore.handle(spark, path)
+    val coarse = IvfStore.loadCentroids(store).getOrElse(
       throw new IllegalStateException(
         s"no persisted coarse quantizer at $path — not a PqStore"))
-    val cb = loadCodebooks(spark, path).getOrElse(
+    val cb = loadCodebooks(store).getOrElse(
       throw new IllegalStateException(
         s"no persisted codebooks at $path — not a PqStore"))
     new PqStore(spark, path, cb, coarse)
   }
 
-  private[functions] def loadCodebooks(spark: SparkSession,
-      path: String): Option[Pq.Codebooks] = {
-    val p = new Path(s"$path/_codebooks")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+  private val CodebooksFile = "_codebooks"
+
+  /** Codebooks as text: header `m dsub`, then one line per subspace,
+    * centroids ';'-separated, dimensions as exact binary64 bits in hex
+    * (the [[IvfStore]] bit-exactness rationale, doubled: the codebooks
+    * are the meaning of every stored byte).
+    */
+  private def codebooksFile(cb: Pq.Codebooks): (String, String) =
+    CodebooksFile -> (s"${cb.m} ${cb.dsub}" +:
+      cb.centroids.toSeq.map(_.map(_.map(d =>
+          java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(d)))
+        .mkString(",")).mkString(";"))).mkString("\n")
+
+  private def loadCodebooks(
+      store: StoreManifest.Handle): Option[Pq.Codebooks] =
+    store.readSide(CodebooksFile).map { text =>
       // same loud-refusal contract as IvfStore.loadCentroids: the
       // codebooks are the meaning of every stored byte, so corrupt
       // metadata must name itself instead of decoding garbage
-      val cb =
-        try {
-          val lines = text.split("\n")
-          val Array(m, dsub) = lines.head.split(" ").map(_.toInt)
-          val cents = lines.tail.map(_.split(";").map(_.split(",").map(h =>
-            java.lang.Double.longBitsToDouble(
-              java.lang.Long.parseUnsignedLong(h, 16)))))
-          require(m > 0 && dsub > 0 && cents.length == m &&
-            cents.forall(_.forall(_.length == dsub)))
-          Pq.Codebooks(m, dsub, cents)
-        } catch { case e: Exception =>
-          throw new IllegalStateException(
-            s"corrupt persisted codebooks at $p — the file is the meaning " +
-              "of every stored code byte; restore it or rebuild with " +
-              "write()", e)
-        }
-      Some(cb)
+      try {
+        val lines = text.split("\n")
+        val Array(m, dsub) = lines.head.split(" ").map(_.toInt)
+        val cents = lines.tail.map(_.split(";").map(_.split(",").map(h =>
+          java.lang.Double.longBitsToDouble(
+            java.lang.Long.parseUnsignedLong(h, 16)))))
+        require(m > 0 && dsub > 0 && cents.length == m &&
+          cents.forall(_.forall(_.length == dsub)))
+        Pq.Codebooks(m, dsub, cents)
+      } catch { case e: Exception =>
+        throw new IllegalStateException(
+          s"corrupt persisted codebooks at ${store.path}/$CodebooksFile — " +
+            "the file is the meaning of every stored code byte; restore it " +
+            "or rebuild with write()", e)
+      }
     }
-  }
 }

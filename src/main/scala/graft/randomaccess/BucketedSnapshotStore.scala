@@ -24,16 +24,11 @@ import graft.sources.StoreManifest
   *     pure pruned scan, not a compaction (contrast
   *     [[RandomAccessReader]], which compacts the changelog per lookup).
   *
-  * Every read resolves the manifest once: maintenance publishes a new
-  * generation in one atomic rename, so a reader racing a [[refresh]]
-  * sees either the complete old version or the complete new one —
-  * replaced files outlive their manifest one retained generation, and a
-  * reader staler than that fails LOUDLY (FileNotFound), never silently
-  * short (the r13 in-place directory swap had a silent-miss window
-  * between its two renames; ManifestStoreSpec pins the new contract).
-  * A crashed mutation leaves the last published version serving and
-  * some unreferenced garbage ([[StoreManifest.vacuum]]) — there is no
-  * refusal state, so availability survives a dead maintainer.
+  * Every read resolves the manifest once and every mutation is one
+  * [[StoreManifest.Handle]] swap, so a reader racing a [[refresh]] sees
+  * either the complete old version or the complete new one, and a
+  * crashed mutation leaves the last published version serving
+  * (ManifestStoreSpec pins the contract).
   *
   * Maintenance: [[refresh]] folds a changelog delta by rewriting ONLY the
   * buckets whose keys the delta touches — at 256 buckets, a delta
@@ -60,22 +55,16 @@ final class BucketedSnapshotStore(spark: SparkSession, val path: String,
     ((h % buckets) + buckets) % buckets
   }
 
-  /** The shared manifest-store plumbing, bound to this store's layout. */
-  private val store = StoreManifest.Handle(spark, path, "kb")
+  /** The shared manifest-store protocol, bound to this store's layout. */
+  private val store = StoreManifest.Handle(spark, path, "kb",
+    Seq("key", "attribute"))
+
+  private def withKb(elements: Dataset[StreamElement]): DataFrame =
+    elements.toDF().withColumn("kb", bucketCol(col("key")))
 
   /** Materialize a compacted snapshot as the store's full contents. */
-  def write(snapshot: Dataset[StreamElement]): Unit = {
-    snapshot.toDF()
-      .withColumn("kb", bucketCol(col("key")))
-      .repartition(col("kb"))
-      .sortWithinPartitions(col("kb"), col("key"), col("attribute"))
-      .write.partitionBy("kb").mode("overwrite")
-      // forced static: dynamic partitionOverwriteMode would merge stale
-      // buckets into a rebuild (see IvfStore.write)
-      .option("partitionOverwriteMode", "static").parquet(path)
-    store.publishInitial(readSchema)
-    ()
-  }
+  def write(snapshot: Dataset[StreamElement]): Unit =
+    store.write(withKb(snapshot), org.apache.spark.sql.types.LongType)
 
   private def asElements(df: DataFrame): Dataset[StreamElement] =
     df.drop("kb").as[StreamElement](StreamElement.encoder)
@@ -148,14 +137,14 @@ final class BucketedSnapshotStore(spark: SparkSession, val path: String,
     */
   def refresh(delta: Dataset[StreamElement]): Unit = this.synchronized {
     val m = store.current().getOrElse(store.publishInitial(readSchema))
-    val withKb = delta.toDF().withColumn("kb", bucketCol(col("key")))
-    val affected = withKb.select("kb").distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
+    val affected = withKb(delta).select("kb").distinct()
+      .collect().map(_.getLong(0)).toSeq
     if (affected.isEmpty) return
     val existing = asElements(store.scan(m, Some(affected)))
-    swapBuckets(m,
-      LatestWithTombstones.compactRetaining(existing.unionByName(delta)),
+    store.commitSwap(m, withKb(
+      LatestWithTombstones.compactRetaining(existing.unionByName(delta))),
       affected)
+    ()
   }
 
   /** Reclaim tombstones older than `horizonUs` — call once lateness is
@@ -170,12 +159,7 @@ final class BucketedSnapshotStore(spark: SparkSession, val path: String,
     // before the first micro-batch ever lands
     val m = store.current().getOrElse(return)
     val expired = col("delete") && col("stamp") < horizonUs
-    val affected = store.scan(m).filter(expired).select("kb").distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    if (affected.isEmpty) return
-    swapBuckets(m,
-      asElements(store.scan(m, Some(affected)).filter(!expired)),
-      affected)
+    store.rewrite(m, _.filter(expired), _.filter(!expired))
   }
 
   /** Maintain the store from a streaming changelog — the reference's
@@ -188,33 +172,10 @@ final class BucketedSnapshotStore(spark: SparkSession, val path: String,
     */
   def replicate(stream: Dataset[StreamElement], checkpoint: String):
       org.apache.spark.sql.streaming.DataStreamWriter[StreamElement] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[StreamElement], _: Long) =>
-        refresh(batch)
-      }
+    StoreManifest.replicate(stream, checkpoint)(refresh)
 
   /** Reclaim files no retained manifest references (crashed-mutation
     * garbage). Run from the (single) maintainer only.
     */
   def vacuum(): Seq[String] = store.vacuum()
-
-  /** Replace the affected buckets' contents with `merged` in one atomic
-    * manifest publish ([[StoreManifest.commitSwap]]): new files are
-    * staged and moved in invisibly, the publish rename flips every
-    * future reader to the new version, and the displaced files survive
-    * one retained generation for readers mid-scan. Crash at any point
-    * leaves the previous version serving.
-    */
-  private def swapBuckets(m: StoreManifest.Manifest,
-      merged: Dataset[StreamElement], affected: Seq[Long]): Unit = {
-    store.commitSwap(m,
-      merged.toDF()
-        .withColumn("kb", bucketCol(col("key")))
-        .repartition(col("kb"))
-        .sortWithinPartitions(col("kb"), col("key"), col("attribute")),
-      affected)
-    ()
-  }
 }

@@ -3,13 +3,16 @@ package graft.sources
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Generation-numbered file manifests for the partition-directory serving
   * stores ([[graft.functions.IvfStore]], [[graft.functions.PqStore]],
+  * [[graft.functions.PostingsStore]],
   * [[graft.randomaccess.BucketedSnapshotStore]]) — the version-pointer
-  * read path that makes staged maintenance safe under concurrent reads.
+  * read path that makes staged maintenance safe under concurrent reads,
+  * and the one mutation protocol those stores share ([[Handle]]).
   *
   * The r13 staged swap renamed live directories in place, which left a
   * window where a reader listing files BETWEEN a cell's two renames
@@ -20,7 +23,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * under their (job-unique) names, then publishes manifest N+1 in one
   * atomic rename; until that instant every reader resolves N and sees the
   * complete old version. Replaced files outlive their manifest by
-  * `retainGens` generations, so a reader racing one maintenance batch
+  * [[RetainGens]] generations, so a reader racing one maintenance batch
   * still reads its resolved version COMPLETELY; a reader older than the
   * retention window fails LOUDLY (FileNotFound) — never silently short.
   *
@@ -31,6 +34,23 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * some unreferenced garbage — reclaimed by [[vacuum]], never by a
   * reader-visible repair step. There is no "interrupted swap" refusal
   * state anymore; availability survives a dead maintainer.
+  *
+  * The mutation protocol ([[Handle]]): a store binds its path, partition
+  * column and within-partition sort, and every mutation it runs is one
+  * of the Handle's sequences on top of ONE resolved version `m`:
+  *   - `write`: forced-static bulk overwrite, side files, generation 1;
+  *   - `appendNew`: pin the delta, refuse duplicate keys, anti-join
+  *     against the keys the store already holds, one pure-append swap —
+  *     the idempotent sink a replayed micro-batch converges through;
+  *   - `upsert`: the same guard, then swap the partitions that hold a
+  *     delta key or receive a delta row, replacement = survivors + delta;
+  *   - `rewrite`: swap only the partitions holding a matched row;
+  *   - `compact`: swap only partitions fragmented past a file count.
+  * Each ends in `commitSwap`, which lays the rows out (cluster by the
+  * partition column, sort within), stages, moves and publishes. A store
+  * keeps only its own projection, validation and query path, and
+  * [[replicate]] turns any of these folds into an epoch-replayable
+  * streaming sink.
   *
   * Supported commit backends: LocalFileSystem (commit = hard link —
   * atomic EEXIST refusal) and the HDFS rename-refuses-destination family
@@ -119,12 +139,20 @@ private[graft] object StoreManifest {
     */
   private def footer(n: Int): String = s"#end $n"
 
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
+  private def writeText(fs: FileSystem, p: Path, text: String,
+      overwrite: Boolean): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
   private def load(fs: FileSystem, path: String, gen: Long): Manifest = {
-    val in = fs.open(manifestPath(path, gen))
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split("\n")
+    val lines = readText(fs, manifestPath(path, gen)).split("\n")
     // the manifest IS the store's read path: corrupt metadata must refuse
     // with provenance, not serve a partial file list
     def corrupt(why: String, cause: Exception = null) =
@@ -143,11 +171,14 @@ private[graft] object StoreManifest {
     Manifest(gen, schema, body)
   }
 
+  /** Generations a replaced file outlives the manifest that dropped it. */
+  private val RetainGens = 2
+
   /** Publish `files` as generation `expectedGen + 1` — one atomic commit
     * flips every future reader to the new version, and two concurrent
     * maintainers cannot both succeed: the loser fails LOUDLY here
     * (single-writer is ENFORCED, not assumed). Old manifests beyond
-    * `retainGens` are retired and the data files only they referenced
+    * [[RetainGens]] are retired and the data files only they referenced
     * are deleted — which is what bounds how stale a still-running reader
     * can be before failing loudly.
     *
@@ -163,8 +194,7 @@ private[graft] object StoreManifest {
     * turns into the same loud refusal.
     */
   def publish(spark: SparkSession, path: String, schema: StructType,
-      files: Seq[String], expectedGen: Long, retainGens: Int = 2): Manifest = {
-    require(retainGens >= 1, s"retainGens must be >= 1, got $retainGens")
+      files: Seq[String], expectedGen: Long): Manifest = {
     val fs = fsOf(spark, path)
     val gen = expectedGen + 1
     val target = manifestPath(path, gen)
@@ -175,8 +205,7 @@ private[graft] object StoreManifest {
     val tmp = new Path(path, s"_manifest_tmp_${UUID.randomUUID()}")
     val sorted = files.sorted
     val body = ((schema.json +: sorted) :+ footer(sorted.size)).mkString("\n")
-    val out = fs.create(tmp, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    writeText(fs, tmp, body, overwrite = false)
     val scheme = Option(target.toUri.getScheme).getOrElse("file")
     val isLocal = scheme == "file" &&
       fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem]
@@ -213,7 +242,7 @@ private[graft] object StoreManifest {
     // listing, so unrelated garbage is never touched here; see vacuum).
     // The just-published gen's files are already in hand — never re-read
     val gens = listGens(fs, path)
-    val (retire, keep) = gens.partition(_ <= gen - retainGens)
+    val (retire, keep) = gens.partition(_ <= gen - RetainGens)
     if (retire.nonEmpty) {
       val kept = (keep.filterNot(_ == gen).map(g => load(fs, path, g).files)
         :+ sorted).flatten.toSet
@@ -241,84 +270,44 @@ private[graft] object StoreManifest {
       spark.read.schema(m.schema).option("basePath", path)
         .parquet(files.map(f => s"$path/$f"): _*)
 
-  /** Stage `replacement` (restricted to the partition dirs in `swapDirs`,
-    * e.g. `cell=3`; empty for a pure append), move its files into the
-    * live layout, and publish: new manifest = old − swapDirs' files +
-    * staged files. Write-side layout knobs (partition column, sort) are
-    * the caller's, applied to `replacement` before calling. Returns the
-    * published manifest.
-    */
-  def commitSwap(spark: SparkSession, path: String, replacement: DataFrame,
-      partitionCol: String, swapDirs: Set[String],
-      retainGens: Int = 2, resolved: Option[Manifest] = None): Manifest = {
-    // callers that already resolved this mutation's base version pass it
-    // through — a manifest parse is O(files) text, which at serving scale
-    // (~1M entries) is the dominant metadata cost of a small mutation
-    val m = resolved.getOrElse(resolve(spark, path, "commitSwap"))
-    val fs = fsOf(spark, path)
-    val staging = s"${path}/_staging_${UUID.randomUUID()}"
-    replacement.write.partitionBy(partitionCol).mode("overwrite")
-      .parquet(staging)
-    // move the staged data files into their live partition dirs under
-    // their job-unique names; nothing here is reader-visible until the
-    // publish. BATCHED (optimization r17, guide §6 I/O): one mkdirs per
-    // distinct partition dir instead of one per file, and the renames —
-    // independent of each other by construction (job-unique names, all
-    // invisible until the publish) — fan out over a bounded driver pool.
-    // Each Hadoop-FS metadata call costs ~10 ms even on a local
-    // filesystem (and far more on an object store), so the serial
-    // per-file mkdirs+rename loop was 2 × files × RPC on the driver
-    // critical path of every store commit.
-    val staged = collectDataFiles(fs, new Path(staging), new Path(staging))
-    staged.map(dirOf).distinct.foreach(d => fs.mkdirs(new Path(s"$path/$d")))
-    val moved = parallelRename(fs, staged.map(rel =>
-      (new Path(s"$staging/$rel"), new Path(s"$path/$rel"), rel)), staging)
-    fs.delete(new Path(staging), true)
-    val kept = m.files.filterNot(f => swapDirs.contains(dirOf(f)))
-    val published = publish(spark, path, m.schema, kept ++ moved, m.gen,
-      retainGens)
-    // opportunistic debris reclamation: a mutation that crashed after its
-    // staging moves strands files no manifest references, and nothing
-    // else in the maintenance flow would ever delete them — so the
-    // writer sweeps on a fixed generation cadence. AGE-GATED: the
-    // single-writer discipline is enforced by the PUBLISH, which means a
-    // raced loser legitimately retries — for a short window two mutators
-    // run concurrently, and an age-0 sweep here could reclaim the
-    // other's moved-but-not-yet-published files out from under its
-    // publish. Minutes-old unreferenced files are crash debris; seconds-
-    // old ones may be an in-flight retry. (The manual [[vacuum]] keeps
-    // age 0 under its stronger "never concurrent with any mutation"
-    // contract.)
-    if (published.gen % VacuumEvery == 0)
-      vacuum(spark, path, minAgeMs = AutoVacuumMinAgeMs)
-    published
-  }
-
   /** Staged-move fan-out: renames run on a bounded per-call pool (the
-    * moves are independent and invisible until the publish); the first
-    * failure aborts the commit exactly as the serial loop did — the
-    * store still serves its previous version, and the documented
-    * recovery (clean the staging dir and retry) is unchanged. Pool size
-    * caps driver-side FS concurrency; object-store connectors throttle
-    * well above 16 concurrent metadata calls.
+    * moves are independent and invisible until the publish). FAIL-FAST:
+    * after the first failed move no further rename starts — the commit is
+    * already lost, and every later move would only strand one more file.
+    * The store still serves its previous version; the files moved before
+    * the failure sit unpublished in live partition dirs until [[vacuum]]
+    * reclaims them (with the staging dir). Pool size caps driver-side FS
+    * concurrency; object-store connectors throttle well above 16
+    * concurrent metadata calls.
     */
-  private def parallelRename(fs: FileSystem,
+  private[sources] def parallelRename(fs: FileSystem,
       moves: Seq[(Path, Path, String)], staging: String): Seq[String] = {
     if (moves.isEmpty) return Seq.empty
+    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def fail(from: Path, to: Path, why: String, cause: Throwable): Nothing = {
+      failed.set(true)
+      throw new IllegalStateException(
+        s"staging move $from -> $to failed ($why); no further moves were " +
+          "started and the store still serves its previous version. Files " +
+          s"already moved out of $staging sit unpublished in live " +
+          "partition dirs — vacuum() reclaims them and the staging dir; " +
+          "then retry", cause)
+    }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(16, moves.size))
     try {
       import scala.jdk.CollectionConverters._
       val tasks = moves.map { case (from, to, rel) =>
         new java.util.concurrent.Callable[String] {
-          override def call(): String = {
-            if (!fs.rename(from, to))
-              throw new IllegalStateException(
-                s"staging move $from -> $to failed (filesystem returned " +
-                  "false); the store still serves its previous version — " +
-                  s"clean $staging and retry")
-            rel
-          }
+          override def call(): String =
+            if (failed.get) null
+            else {
+              val ok =
+                try fs.rename(from, to)
+                catch { case e: Exception => fail(from, to, e.toString, e) }
+              if (!ok) fail(from, to, "filesystem returned false", null)
+              rel
+            }
         }
       }
       pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
@@ -327,7 +316,7 @@ private[graft] object StoreManifest {
     } finally pool.shutdown()
   }
 
-  /** Generation cadence of [[commitSwap]]'s opportunistic [[vacuum]]. */
+  /** Generation cadence of [[Handle.commitSwap]]'s opportunistic [[vacuum]]. */
   private val VacuumEvery = 16L
 
   /** Age gate of the opportunistic vacuum — older than any sane
@@ -392,23 +381,21 @@ private[graft] object StoreManifest {
       seg.startsWith("_") || seg.startsWith(".")))
   }
 
-  /** Per-store binding of (path, partition column): the read/maintenance
-    * plumbing every manifest store shares. One definition — the protocol
-    * (pruned scans, swap commits, fragmentation accounting, the
-    * partition-typed read schema) must not exist as three drifting
-    * copies across IvfStore / PqStore / BucketedSnapshotStore: a
-    * protocol fix landing in two of three would silently desync the
-    * third.
+  /** Per-store binding of (path, partition column, within-partition
+    * sort): the read path and the ONE mutation protocol every manifest
+    * store shares (see the object doc). A protocol fix lands here once;
+    * the stores keep only their projection, validation and queries.
     */
   final case class Handle(spark: SparkSession, path: String,
-      partitionCol: String) {
+      partitionCol: String, sortBy: Seq[String]) {
+    import org.apache.spark.sql.functions._
 
     def current(): Option[Manifest] = StoreManifest.current(spark, path)
 
     def resolve(op: String): Manifest = StoreManifest.resolve(spark, path, op)
 
     /** `cell=3`-style directory names for a partition-value subset. */
-    def dirs(values: Seq[Any]): Set[String] =
+    private def dirs(values: Seq[Any]): Set[String] =
       values.map(v => s"$partitionCol=$v").toSet
 
     /** Scan of version `m`, optionally pruned to a partition-value
@@ -422,18 +409,180 @@ private[graft] object StoreManifest {
       StoreManifest.read(spark, path, m, files)
     }
 
-    /** Replace `swapParts`' contents with `replacement` (empty set = pure
-      * append) on top of version `m`, in one atomic publish.
+    /** The store's physical layout: one shuffle clusters each partition
+      * value into one task, sorted within by (partition, sortBy), so a
+      * partition dir gains one file per write, row groups prunable on
+      * the sort key.
+      */
+    private def laidOut(rows: DataFrame): DataFrame =
+      rows.repartition(col(partitionCol))
+        .sortWithinPartitions((partitionCol +: sortBy).map(col): _*)
+
+    private def partValues(rows: DataFrame): Seq[String] =
+      rows.select(partitionCol).distinct().collect()
+        .map(_.get(0).toString).toSeq
+
+    /** Build (or fully rebuild) the store from `rows`, write the side
+      * files, and publish generation 1 with the read schema's partition
+      * column typed as its path segment parses back (`partitionType`).
+      * The overwrite is FORCED static: under a session's dynamic
+      * partitionOverwriteMode a rebuild would keep untouched partitions'
+      * old files AND old manifests whose files the overwrite deleted —
+      * two corpora merged, readers FileNotFound mid-scan, and a
+      * generation collision at publish. Side files land before the
+      * publish, so a published store always has them.
+      */
+    def write(rows: DataFrame, partitionType: DataType,
+        sideFiles: (String, String)*): Unit = {
+      laidOut(rows).write.partitionBy(partitionCol).mode("overwrite")
+        .option("partitionOverwriteMode", "static").parquet(path)
+      sideFiles.foreach { case (name, text) =>
+        writeText(fsOf(spark, path), new Path(path, name), text, overwrite = true)
+      }
+      publishInitial(StructType(rows.schema.fields.map { f =>
+        if (f.name == partitionCol) f.copy(dataType = partitionType) else f
+      }))
+      ()
+    }
+
+    /** A side file's text (`_quantizer`, `_codebooks`, `_layout`), or None
+      * when absent. The caller owns its format and its loud refusal.
+      */
+    def readSide(name: String): Option[String] = {
+      val p = new Path(path, name)
+      val fs = fsOf(spark, path)
+      if (fs.exists(p)) Some(readText(fs, p)) else None
+    }
+
+    /** `rows` must carry each `key` at most once; returns the row count.
+      * Two rows for one key is a data error, and silently keeping one
+      * would be layout-dependent.
+      */
+    private def requireUniqueKeys(op: String, key: String,
+        rows: DataFrame): Long = {
+      val Array(n, d) = rows.agg(count(lit(1)), countDistinct(col(key)))
+        .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
+      require(n == d, s"$op: delta carries ${n - d} duplicate ${key}s — " +
+        s"two rows for one $key is a data error")
+      n
+    }
+
+    /** Idempotent append: file the rows of `pinned` whose `key` the store
+      * does not hold yet (`existing(pinned)` lists the held keys), as
+      * `build(fresh)`, in one pure-append swap. `pinned` is persisted for
+      * the whole mutation, so the guard and the committed write see ONE
+      * row set (a non-deterministic source re-evaluated per action could
+      * pass the guard with one set and commit another) and its
+      * projection runs once. A replayed delta converges: its keys are
+      * dropped even when a re-offered row would land in another
+      * partition. A fully-replayed delta publishes an identical file
+      * list — cheaper than an emptiness check on every append.
+      */
+    def appendNew(m: Manifest, op: String, key: String, pinned: DataFrame,
+        existing: DataFrame => DataFrame,
+        build: DataFrame => DataFrame): Unit = {
+      val rows = pinned.persist()
+      try {
+        if (requireUniqueKeys(op, key, rows) > 0) {
+          val fresh = rows.join(existing(rows), Seq(key), "left_anti")
+          commitSwap(m, build(fresh), Seq.empty)
+        }
+      } finally { rows.unpersist(); () }
+    }
+
+    /** Replace every stored row whose `key` appears in `projected` and
+      * file the rest as new, in ONE generation: the swap set is the
+      * partitions holding a matched key plus those the delta files into,
+      * the replacement their survivors plus the delta. A crash leaves the
+      * full old version or the full new one — never "keys removed,
+      * replacements not yet filed". The guard runs over the persisted
+      * projection first, so every refusal fires before anything is
+      * staged.
+      */
+    def upsert(m: Manifest, op: String, key: String,
+        projected: DataFrame): Unit = {
+      val rows = projected.persist()
+      try {
+        if (requireUniqueKeys(op, key, rows) > 0) {
+          val keys = rows.select(key)
+          val touched = (partValues(scan(m).join(keys, Seq(key), "left_semi"))
+            ++ partValues(rows)).distinct
+          commitSwap(m, scan(m, Some(touched))
+            .join(keys, Seq(key), "left_anti").unionByName(rows), touched)
+        }
+      } finally { rows.unpersist(); () }
+    }
+
+    /** Rewrite only the partitions where `matched(scan)` has a row,
+      * replacing each with `keep(its rows)`; partitions left empty
+      * disappear from the manifest.
+      */
+    def rewrite(m: Manifest, matched: DataFrame => DataFrame,
+        keep: DataFrame => DataFrame): Unit = {
+      val touched = partValues(matched(scan(m)))
+      if (touched.nonEmpty) commitSwap(m, keep(scan(m, Some(touched))), touched)
+    }
+
+    /** Rewrite every partition holding more than `maxFilesPerDir` files
+      * into a fresh file set — read off the manifest, contents unchanged.
+      */
+    def compact(m: Manifest, maxFilesPerDir: Int): Unit = {
+      val frag = fragmented(m, maxFilesPerDir)
+      if (frag.nonEmpty) commitSwap(m, scan(m, Some(frag)), frag)
+    }
+
+    /** Replace `swapParts`' contents with `replacement` (empty = pure
+      * append) on top of version `m`: lay the rows out, stage them, move
+      * the files into the live layout and publish new manifest = `m` −
+      * swapParts' files + staged files. `m` is the version the caller
+      * resolved for this mutation — a manifest parse is O(files) text,
+      * the dominant metadata cost of a small mutation at serving scale.
       */
     def commitSwap(m: Manifest, replacement: DataFrame,
-        swapParts: Seq[Any]): Manifest =
-      StoreManifest.commitSwap(spark, path, replacement, partitionCol,
-        dirs(swapParts), resolved = Some(m))
+        swapParts: Seq[Any]): Manifest = {
+      val fs = fsOf(spark, path)
+      val staging = s"${path}/_staging_${UUID.randomUUID()}"
+      laidOut(replacement).write.partitionBy(partitionCol).mode("overwrite")
+        .parquet(staging)
+      // move the staged data files into their live partition dirs under
+      // their job-unique names; nothing here is reader-visible until the
+      // publish. BATCHED (optimization r17, guide §6 I/O): one mkdirs per
+      // distinct partition dir instead of one per file, and the renames —
+      // independent of each other by construction (job-unique names, all
+      // invisible until the publish) — fan out over a bounded driver pool.
+      // Each Hadoop-FS metadata call costs ~10 ms even on a local
+      // filesystem (and far more on an object store), so the serial
+      // per-file mkdirs+rename loop was 2 × files × RPC on the driver
+      // critical path of every store commit.
+      val staged = collectDataFiles(fs, new Path(staging), new Path(staging))
+      staged.map(dirOf).distinct.foreach(d => fs.mkdirs(new Path(s"$path/$d")))
+      val moved = parallelRename(fs, staged.map(rel =>
+        (new Path(s"$staging/$rel"), new Path(s"$path/$rel"), rel)), staging)
+      fs.delete(new Path(staging), true)
+      val swapDirs = dirs(swapParts)
+      val kept = m.files.filterNot(f => swapDirs.contains(dirOf(f)))
+      val published = publish(spark, path, m.schema, kept ++ moved, m.gen)
+      // opportunistic debris reclamation: a mutation that crashed after its
+      // staging moves strands files no manifest references, and nothing
+      // else in the maintenance flow would ever delete them — so the
+      // writer sweeps on a fixed generation cadence. AGE-GATED: the
+      // single-writer discipline is enforced by the PUBLISH, which means a
+      // raced loser legitimately retries — for a short window two mutators
+      // run concurrently, and an age-0 sweep here could reclaim the
+      // other's moved-but-not-yet-published files out from under its
+      // publish. Minutes-old unreferenced files are crash debris; seconds-
+      // old ones may be an in-flight retry. (The manual [[vacuum]] keeps
+      // age 0 under its stronger "never concurrent with any mutation"
+      // contract.)
+      if (published.gen % VacuumEvery == 0)
+        StoreManifest.vacuum(spark, path, minAgeMs = AutoVacuumMinAgeMs)
+      published
+    }
 
     /** Partition values whose directories hold more than
       * `maxFilesPerDir` files — read straight off the manifest.
       */
-    def fragmented(m: Manifest, maxFilesPerDir: Int): Seq[String] =
+    private def fragmented(m: Manifest, maxFilesPerDir: Int): Seq[String] =
       m.files.groupBy(dirOf)
         .collect { case (d, fs) if d.startsWith(partitionCol + "=") &&
             fs.size > maxFilesPerDir =>
@@ -444,23 +593,26 @@ private[graft] object StoreManifest {
       StoreManifest.publishInitial(spark, path, schema)
 
     def vacuum(): Seq[String] = StoreManifest.vacuum(spark, path)
-
-    /** The written frame's schema with the partition column re-typed to
-      * what the `part=value` path segment parses back as.
-      */
-    def readSchema(written: StructType,
-        partitionType: org.apache.spark.sql.types.DataType): StructType =
-      StructType(written.fields.map { f =>
-        if (f.name == partitionCol) f.copy(dataType = partitionType) else f
-      })
   }
+
+  /** Maintain a store from a stream: every micro-batch is one `fold`
+    * (an idempotent append or an order-insensitive refresh), so replay
+    * of an epoch after a checkpoint restart converges instead of
+    * duplicating. The caller `.start()`s the returned writer.
+    */
+  def replicate[T](stream: Dataset[T], checkpoint: String)(
+      fold: Dataset[T] => Unit): DataStreamWriter[T] =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[T], _: Long) => fold(batch) }
 
   /** Reclaim files no retained manifest references — the garbage a
     * CRASHED mutation strands (staging dirs, moved-but-unpublished
     * files, a publish's orphaned `_manifest_tmp_*`). At `minAgeMs = 0`
     * (the default) the caller asserts NO mutation is concurrently in
     * flight; a positive `minAgeMs` spares unreferenced files younger
-    * than the gate, which is what lets [[commitSwap]]'s opportunistic
+    * than the gate, which is what lets [[Handle.commitSwap]]'s opportunistic
     * sweep coexist with a raced-and-retrying second mutator. Returns
     * the deleted paths.
     */

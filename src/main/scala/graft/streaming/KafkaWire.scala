@@ -79,6 +79,20 @@ object KafkaWire {
     */
   private val MaxValueBytes = 1 << 26
 
+  /** The same cap for a frame's partition count: a topic's width sizes
+    * its per-partition logs up front, so a hostile claim of millions of
+    * partitions must refuse before the allocation too.
+    */
+  private val MaxPartitions = 1 << 16
+
+  private def readWidth(in: DataInputStream): Int = {
+    val n = in.readInt()
+    if (n < 1 || n > MaxPartitions) throw new IllegalStateException(
+      s"kafka-wire frame claims $n partitions (outside 1..$MaxPartitions) " +
+        "— refusing before allocation; corrupt or hostile peer")
+    n
+  }
+
   private[streaming] def readElement(in: DataInputStream): StreamElement = {
     val entity = in.readUTF(); val key = in.readUTF()
     val attribute = in.readUTF(); val uuid = in.readUTF()
@@ -282,7 +296,7 @@ object KafkaWire {
           if (op < 0) throw new EOFException
           op match {
             case OpCreate =>
-              val (name, n) = (in.readUTF(), in.readInt())
+              val (name, n) = (in.readUTF(), readWidth(in))
               val t = topic(name, n)
               replicas.foreach(_.call(_.create(name, t.numPartitions)))
               out.writeInt(t.numPartitions)
@@ -294,8 +308,10 @@ object KafkaWire {
               // frame mid-batch (e.g. the 64 MiB hostile-claim cap) must
               // leave the log untouched — applying as we decode would
               // durably keep the prefix while the client sees only a dead
-              // socket, and its at-least-once retry would duplicate it
-              val elems = Array.tabulate(n)(_ => readElement(in))
+              // socket, and its at-least-once retry would duplicate it.
+              // The array grows as frames arrive: a hostile count hits EOF
+              // instead of allocating n slots up front
+              val elems = Iterator.fill(n)(readElement(in)).toArray
               // assignment + forward under the topic's sequencer: the
               // follower must see frames in offset order (see replSeq)
               sequenced(name) {
@@ -315,13 +331,13 @@ object KafkaWire {
               out.writeInt(r.partition); out.writeLong(r.offset)
             case OpReplicateBatch =>
               val name = in.readUTF()
-              val width = in.readInt()
+              val width = readWidth(in)
               val t = topic(name, width)
               val n = in.readInt()
-              val recs = Array.tabulate(n) { _ =>
+              val recs = Iterator.fill(n) {
                 val (p, off) = (in.readInt(), in.readLong())
                 (p, off, readElement(in))
-              }
+              }.toArray
               // apply + relay under the sequencer too: a promoted
               // follower taking direct producer appends while a late
               // relay drains must not interleave its own forwards out

@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.GraftSession
 import graft.sources.StoreManifest
@@ -55,13 +54,13 @@ object ManifestRaceSmoke {
   }
 
   private def handle(spark: SparkSession, path: String) =
-    StoreManifest.Handle(spark, path, Cell)
+    StoreManifest.Handle(spark, path, Cell, Seq("id"))
 
   /** A 10-row delta batch `idBase..idBase+9`, cells spread 0-3. */
   private def batch(spark: SparkSession, idBase: Long): DataFrame = {
     import spark.implicits._
     (idBase until idBase + 10L).map(i => (i, (i % 4).toInt))
-      .toDF("id", Cell).repartition(col(Cell))
+      .toDF("id", Cell)
   }
 
   private def awaitBarrier(coord: String, name: String, expect: Int): Unit = {

@@ -43,4 +43,13 @@ object GraftSqlBridge {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** A fresh temp dir that Spark's shutdown hook deletes, with its
+    * contents, when the JVM exits.
+    */
+  def tempDirDeletedAtExit(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
+    dir.getPath
+  }
 }

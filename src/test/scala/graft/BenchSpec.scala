@@ -75,7 +75,7 @@ class BenchSpec extends SparkSpec {
   }
 
   test("writeResultArtifacts persists the identical JSON line, root + per-SF") {
-    val dir = java.nio.file.Files.createTempDirectory("bench-artifact")
+    val dir = tempDir("bench-artifact")
     val json = Bench.renderJson(Seq(("q_x", 1.5, None)), "/data/sf0.1")
     Bench.writeResultArtifacts(json, "/data/sf0.1", dir.toString)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

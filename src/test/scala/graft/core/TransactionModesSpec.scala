@@ -279,14 +279,12 @@ class TransactionModesSpec extends SparkSpec {
   }
 
   test("LAW: commitMany == the sequential schedule (winners, seqIds, log)") {
-    // a contention-rich deterministic schedule: pairs racing one cell
-    // (loser must abort), interleaved begins, a no-conflict different-
-    // attribute pair, and a three-way race with one winner
-    Seq(TransactionMode.Attribute, TransactionMode.Key).foreach { mode =>
-      val fBatch = fam(); val fSeq = fam()
-      val cb = new TransactionCoordinator(fBatch, mode)
-      import TransactionCoordinator.{ScheduleStep => St}
-      val schedule: Seq[TransactionCoordinator.ScheduleStep] = Seq(
+    import TransactionCoordinator.{ScheduleStep => St}
+    val schedules: Seq[Seq[TransactionCoordinator.ScheduleStep]] = Seq(
+      // a contention-rich deterministic schedule: pairs racing one cell
+      // (loser must abort), interleaved begins, a no-conflict different-
+      // attribute pair, and a three-way race with one winner
+      Seq(
         // pair race on one cell: 0 wins, 1 aborts
         St.Begin(0), St.Begin(1),
         St.Update(0, up("u1", "bal", 1, "a")), St.Commit(0),
@@ -302,7 +300,17 @@ class TransactionModesSpec extends SparkSpec {
         St.Update(6, up("u2", "bal", 7, "g")),
         St.Commit(4), St.Commit(5), St.Commit(6),
         // begins AFTER earlier commits see them in their snapshot
-        St.Begin(7), St.Update(7, up("u1", "bal", 8, "h")), St.Commit(7))
+        St.Begin(7), St.Update(7, up("u1", "bal", 8, "h")), St.Commit(7)),
+      // an empty-write commit persists nothing, so the next begin must
+      // not see its seq
+      Seq(
+        St.Begin(0), St.Update(0, up("u1", "bal", 1, "a")), St.Commit(0),
+        St.Begin(1), St.Commit(1),
+        St.Begin(2), St.Update(2, up("u1", "bal", 2, "b")), St.Commit(2)))
+    for (schedule <- schedules;
+         mode <- Seq(TransactionMode.Attribute, TransactionMode.Key)) {
+      val fBatch = fam(); val fSeq = fam()
+      val cb = new TransactionCoordinator(fBatch, mode)
       val batched = cb.commitMany(schedule)
         .map(o => (o.txn, o.result))
       val sequential = sequentialReplay(fSeq, mode, schedule)

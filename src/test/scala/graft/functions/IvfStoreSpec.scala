@@ -21,7 +21,7 @@ class IvfStoreSpec extends SparkSpec {
     val emb = corpus
     val centroids = Ivf.train(emb, nCentroids = 4, maxIter = 10)
     val s = new IvfStore(spark,
-      Files.createTempDirectory("graft-ivfstore-").toString + "/v", centroids)
+      tempDir("graft-ivfstore-").toString + "/v", centroids)
     s.write(emb)
     (s, emb)
   }
@@ -65,14 +65,14 @@ class IvfStoreSpec extends SparkSpec {
     val delta = emb.filter($"vec_id" % 3 === 0)
 
     val maintained = new IvfStore(spark,
-      Files.createTempDirectory("ivf-maint-").toString + "/v", centroids)
+      tempDir("ivf-maint-").toString + "/v", centroids)
     maintained.write(base)
     // maintenance goes through the persisted-quantizer handle
     val handle = IvfStore.open(spark, maintained.path)
     handle.append(delta)
 
     val rebuilt = new IvfStore(spark,
-      Files.createTempDirectory("ivf-rebuilt-").toString + "/v", centroids)
+      tempDir("ivf-rebuilt-").toString + "/v", centroids)
     rebuilt.write(emb)
 
     val got = topk(handle, emb, $"vec_id" < 6)
@@ -129,7 +129,7 @@ class IvfStoreSpec extends SparkSpec {
     val emb = corpus
     val centroids = Ivf.train(emb, nCentroids = 4, maxIter = 10)
     val s = new IvfStore(spark,
-      Files.createTempDirectory("ivf-nullpred-").toString + "/v", centroids)
+      tempDir("ivf-nullpred-").toString + "/v", centroids)
     s.write(emb)
     // pred is NULL exactly on even ids, TRUE on id 3 (cluster 3's cell is
     // touched), FALSE elsewhere: a keep-filter of bare !pred would drop
@@ -149,7 +149,7 @@ class IvfStoreSpec extends SparkSpec {
     val emb = corpus
     val centroids = Ivf.train(emb, nCentroids = 4, maxIter = 10)
     val s = new IvfStore(spark,
-      Files.createTempDirectory("ivf-compact-").toString + "/v", centroids)
+      tempDir("ivf-compact-").toString + "/v", centroids)
     s.write(emb.filter($"vec_id" < 100))
     (0 until 3).foreach(i =>
       s.append(emb.filter($"vec_id" >= 100 + i * 30 && $"vec_id" < 130 + i * 30)))
@@ -164,7 +164,7 @@ class IvfStoreSpec extends SparkSpec {
   test("appendIdempotent drops re-offered vectors; replicate replay converges") {
     val emb = corpus
     val centroids = Ivf.train(emb, nCentroids = 4, maxIter = 10)
-    val tmp = Files.createTempDirectory("ivf-idem-").toString
+    val tmp = tempDir("ivf-idem-").toString
     val s = new IvfStore(spark, tmp + "/v", centroids)
     s.write(emb.filter($"vec_id" < 80))
     // the delta overlaps the seed: only the 120 new ids may land
@@ -217,7 +217,7 @@ class IvfStoreSpec extends SparkSpec {
     val emb = corpus
     val centroids = Ivf.train(emb, nCentroids = 4, maxIter = 10)
     val s = new IvfStore(spark,
-      Files.createTempDirectory("ivf-upsert-").toString + "/v", centroids)
+      tempDir("ivf-upsert-").toString + "/v", centroids)
     s.write(emb.filter($"vec_id" < 150))
     // re-embed ids 0-49 with cluster-((id+1)%4) vectors (cells MOVE) and
     // introduce 150-199 as new
@@ -324,7 +324,7 @@ class IvfStoreSpec extends SparkSpec {
     val emb = corpus
     val centroids = Ivf.train(emb, nCentroids = 4, maxIter = 10)
     val s = new IvfStore(spark,
-      Files.createTempDirectory("ivf-race-").toString + "/v", centroids)
+      tempDir("ivf-race-").toString + "/v", centroids)
     s.write(emb) // gen 1: 200 rows
     // mutation plan with deterministic per-generation counts: remove a
     // 10-id slab then append it back, so EVERY published generation
@@ -415,7 +415,7 @@ class IvfStoreSpec extends SparkSpec {
       val emb = corpus
       val centroids = Ivf.train(emb, nCentroids = 4, maxIter = 10)
       val s = new IvfStore(spark,
-        Files.createTempDirectory("graft-ivfdyn-").toString + "/v", centroids)
+        tempDir("graft-ivfdyn-").toString + "/v", centroids)
       s.write(emb) // all 4 cells populated
       // rebuild with ONLY cluster 0: under dynamic overwrite the other
       // cells' old files (and the previous manifests) would survive —

@@ -32,7 +32,7 @@ class PostingsStoreSpec extends SparkSpec {
   test("index topK is bit-identical to the two-scan Bm25.topK") {
     val docs = corpus
     val ix = new PostingsStore(spark,
-      Files.createTempDirectory("postings-").toString + "/ix", buckets = 8)
+      tempDir("postings-").toString + "/ix", buckets = 8)
     ix.write(docs)
     val got = canon(ix.topK(terms, 10))
     val twoScan = canon(Bm25.topK(docs, "doc_id", "text", terms, 10))
@@ -43,7 +43,7 @@ class PostingsStoreSpec extends SparkSpec {
   test("appendIdempotent drops re-offered docs; full replay converges") {
     val docs = corpus
     val ix = new PostingsStore(spark,
-      Files.createTempDirectory("postings-idem-").toString + "/ix", buckets = 8)
+      tempDir("postings-idem-").toString + "/ix", buckets = 8)
     ix.write(docs.filter($"doc_id" < 40))
     val handle = PostingsStore.open(spark, ix.path)
     handle.appendIdempotent(docs.filter($"doc_id" >= 20)) // overlap 20-39
@@ -53,7 +53,7 @@ class PostingsStoreSpec extends SparkSpec {
       .select("doc_id").as[Long].collect()
     assert(members.length == 80 && members.toSet.size == 80)
     val rebuilt = new PostingsStore(spark,
-      Files.createTempDirectory("postings-rebuilt-").toString + "/ix",
+      tempDir("postings-rebuilt-").toString + "/ix",
       buckets = 8)
     rebuilt.write(docs)
     assert(canon(handle.topK(terms, 10)) == canon(rebuilt.topK(terms, 10)))
@@ -61,7 +61,7 @@ class PostingsStoreSpec extends SparkSpec {
 
   test("streamed replication converges under fresh-checkpoint replay") {
     val docs = corpus
-    val tmp = Files.createTempDirectory("postings-repl-").toString
+    val tmp = tempDir("postings-repl-").toString
     val ix = new PostingsStore(spark, tmp + "/ix", buckets = 8)
     ix.write(docs.filter($"doc_id" < 10))
     docs.write.parquet(tmp + "/feed")
@@ -82,7 +82,7 @@ class PostingsStoreSpec extends SparkSpec {
   test("data errors and layout drift refuse loudly") {
     val docs = corpus
     val ix = new PostingsStore(spark,
-      Files.createTempDirectory("postings-guard-").toString + "/ix", buckets = 8)
+      tempDir("postings-guard-").toString + "/ix", buckets = 8)
     ix.write(docs)
     val dup = docs.filter($"doc_id" === 0L).unionByName(docs.filter($"doc_id" === 0L))
     val e1 = intercept[IllegalArgumentException] { ix.appendIdempotent(dup) }
@@ -98,7 +98,7 @@ class PostingsStoreSpec extends SparkSpec {
   test("query reads only the query terms' buckets (partition pruning)") {
     val docs = corpus
     val ix = new PostingsStore(spark,
-      Files.createTempDirectory("postings-prune-").toString + "/ix",
+      tempDir("postings-prune-").toString + "/ix",
       buckets = 32)
     ix.write(docs)
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -125,7 +125,7 @@ class PostingsStoreSpec extends SparkSpec {
       "a bare cast would null every string id and collapse the corpus " +
       "onto one NULL key") {
     val ix = new PostingsStore(spark,
-      Files.createTempDirectory("postings-ids-").toString + "/ix", buckets = 8)
+      tempDir("postings-ids-").toString + "/ix", buckets = 8)
     def messageChain(t: Throwable): String = {
       val sb = new StringBuilder
       var e = t
@@ -149,7 +149,7 @@ class PostingsStoreSpec extends SparkSpec {
       "stats and topK") {
     val docs = corpus
     val ix = new PostingsStore(spark,
-      Files.createTempDirectory("postings-stray-").toString + "/ix",
+      tempDir("postings-stray-").toString + "/ix",
       buckets = 8)
     ix.write(docs)
     val (n0, sum0) = ix.stats()

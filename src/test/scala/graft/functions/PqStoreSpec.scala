@@ -29,7 +29,7 @@ class PqStoreSpec extends SparkSpec {
     val emb = corpus
     val (cb, coarse) = quantizers(emb)
     val s = new PqStore(spark,
-      Files.createTempDirectory("pqstore-").toString + "/v", cb, coarse)
+      tempDir("pqstore-").toString + "/v", cb, coarse)
     s.write(emb)
     val got = topk(s.searchTopK(emb.filter($"vec_id" < 6), 5, nProbe = 4))
     val mem = topk(Pq.searchTopKIvf(emb, $"vec_id" < 6, 5, cb, coarse,
@@ -42,7 +42,7 @@ class PqStoreSpec extends SparkSpec {
     val emb = corpus
     val (cb, coarse) = quantizers(emb)
     val s = new PqStore(spark,
-      Files.createTempDirectory("pqstore-prune-").toString + "/v", cb, coarse)
+      tempDir("pqstore-prune-").toString + "/v", cb, coarse)
     s.write(emb)
     val probed = s.probedCodes(Set(0))
     val files = probed.inputFiles
@@ -59,7 +59,7 @@ class PqStoreSpec extends SparkSpec {
     val emb = corpus
     val (cb, coarse) = quantizers(emb)
     val s = new PqStore(spark,
-      Files.createTempDirectory("pqstore-rm-").toString + "/v", cb, coarse)
+      tempDir("pqstore-rm-").toString + "/v", cb, coarse)
     s.write(emb)
     // take down cluster-2's vectors (ids with i % 4 == 2)
     val takedown = emb.filter($"vec_id" % 4 === 2).select("vec_id")
@@ -72,7 +72,7 @@ class PqStoreSpec extends SparkSpec {
     assert(got.nonEmpty && !got.exists(_ % 4 == 2))
     // equal to a store rebuilt without them
     val rebuilt = new PqStore(spark,
-      Files.createTempDirectory("pqstore-rm-rebuilt-").toString + "/v",
+      tempDir("pqstore-rm-rebuilt-").toString + "/v",
       cb, coarse)
     rebuilt.write(emb.filter($"vec_id" % 4 =!= 2))
     assert(topk(s.searchTopK(emb.filter($"vec_id" < 6), 5, nProbe = 4)) ==
@@ -83,7 +83,7 @@ class PqStoreSpec extends SparkSpec {
     val emb = corpus
     val (cb, coarse) = quantizers(emb)
     val s = new PqStore(spark,
-      Files.createTempDirectory("pqstore-corrupt-").toString + "/v", cb, coarse)
+      tempDir("pqstore-corrupt-").toString + "/v", cb, coarse)
     s.write(emb)
     def corrupt(name: String, body: String): Unit = {
       java.nio.file.Files.write(java.nio.file.Paths.get(s.path, name),
@@ -110,13 +110,13 @@ class PqStoreSpec extends SparkSpec {
     val emb = corpus
     val (cb, coarse) = quantizers(emb)
     val maintained = new PqStore(spark,
-      Files.createTempDirectory("pqstore-maint-").toString + "/v", cb, coarse)
+      tempDir("pqstore-maint-").toString + "/v", cb, coarse)
     maintained.write(emb.filter($"vec_id" % 2 === 0))
     val handle = PqStore.open(spark, maintained.path)
     handle.append(emb.filter($"vec_id" % 2 === 1))
 
     val rebuilt = new PqStore(spark,
-      Files.createTempDirectory("pqstore-rebuilt-").toString + "/v", cb, coarse)
+      tempDir("pqstore-rebuilt-").toString + "/v", cb, coarse)
     rebuilt.write(emb)
     val q = emb.filter($"vec_id" < 6)
     val got = topk(handle.searchTopK(q, 5, nProbe = 4))
@@ -133,7 +133,7 @@ class PqStoreSpec extends SparkSpec {
       "(the IvfStore maintenance laws on the compressed copy)") {
     val emb = corpus
     val (cb, coarse) = quantizers(emb)
-    val tmp = Files.createTempDirectory("pqstore-idem-").toString
+    val tmp = tempDir("pqstore-idem-").toString
     val s = new PqStore(spark, tmp + "/v", cb, coarse)
     s.write(emb.filter($"vec_id" < 80))
     // overlap with the seed: only the 120 new ids may land
@@ -176,7 +176,7 @@ class PqStoreSpec extends SparkSpec {
     val emb = corpus
     val (cb, coarse) = quantizers(emb)
     val s = new PqStore(spark,
-      Files.createTempDirectory("pqstore-upsert-").toString + "/v", cb, coarse)
+      tempDir("pqstore-upsert-").toString + "/v", cb, coarse)
     s.write(emb.filter($"vec_id" < 150))
     // re-embed ids 0-19 into cluster-((id+1)%4) directions, add 150-199
     val delta = (0L until 20L).map { i =>
@@ -199,7 +199,7 @@ class PqStoreSpec extends SparkSpec {
     val postCorpus = delta
       .unionByName(emb.filter($"vec_id" >= 20 && $"vec_id" < 150))
     val rebuilt = new PqStore(spark,
-      Files.createTempDirectory("pqstore-upsert-rebuilt-").toString + "/v",
+      tempDir("pqstore-upsert-rebuilt-").toString + "/v",
       cb, coarse)
     rebuilt.write(postCorpus)
     val q = postCorpus.filter($"vec_id" < 6)
@@ -226,7 +226,7 @@ class PqStoreSpec extends SparkSpec {
 
     // fragmentation: several appends, then compact — answers unchanged
     val frag = new PqStore(spark,
-      Files.createTempDirectory("pqstore-frag-").toString + "/v", cb, coarse)
+      tempDir("pqstore-frag-").toString + "/v", cb, coarse)
     frag.write(emb.filter($"vec_id" < 100))
     (0 until 3).foreach(i =>
       frag.append(emb.filter($"vec_id" >= 100 + i * 30 && $"vec_id" < 130 + i * 30)))
@@ -245,7 +245,7 @@ class PqStoreSpec extends SparkSpec {
     val emb = corpus
     val (cb, coarse) = quantizers(emb)
     val s = new PqStore(spark,
-      Files.createTempDirectory("pqstore-dup-").toString + "/v", cb, coarse)
+      tempDir("pqstore-dup-").toString + "/v", cb, coarse)
     s.write(emb.filter($"vec_id" < 100))
     // id 900 twice with embeddings from DIFFERENT clusters: the old
     // vec_id self-join paired one duplicate's code with the other's
@@ -268,7 +268,7 @@ class PqStoreSpec extends SparkSpec {
     val emb = corpus
     val (cb, coarse) = quantizers(emb)
     val s = new PqStore(spark,
-      Files.createTempDirectory("pqstore-dim-").toString + "/v", cb, coarse)
+      tempDir("pqstore-dim-").toString + "/v", cb, coarse)
     s.write(emb)
     val long = Seq((901L, Array.fill(16)(1.0f))).toDF("vec_id", "embedding")
     val e = intercept[IllegalArgumentException] {

@@ -20,7 +20,7 @@ class BucketedSnapshotSpec extends SparkSpec {
     spark.createDataset(xs)(StreamElement.encoder)
 
   private def store(b: Int = 8) = new BucketedSnapshotStore(spark,
-    Files.createTempDirectory("graft-bss-").toString + "/store", buckets = b)
+    tempDir("graft-bss-").toString + "/store", buckets = b)
 
   private val hist = (1 to 50).map(i => up(s"k$i", "status", i.toLong, s"v$i"))
 
@@ -182,7 +182,7 @@ class BucketedSnapshotSpec extends SparkSpec {
   test("replicate restart from checkpoint converges (idempotent refresh)") {
     implicit val sq = spark.sqlContext
     implicit val enc = StreamElement.encoder
-    val ckpt = Files.createTempDirectory("graft-bss-ckpt2-").toString
+    val ckpt = tempDir("graft-bss-ckpt2-").toString
     val s = store(b = 4)
     s.write(log(Nil))
 
@@ -219,7 +219,7 @@ class BucketedSnapshotSpec extends SparkSpec {
     val s = store(b = 4)
     s.write(log(Nil)) // empty store
     val q = s.replicate(input.toDS(),
-      Files.createTempDirectory("graft-bss-ckpt-").toString).start()
+      tempDir("graft-bss-ckpt-").toString).start()
     try {
       input.addData(up("k1", "x", 10, "v10"), up("k2", "x", 11, "v11"))
       q.processAllAvailable()

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -15,7 +16,7 @@ class ManifestStoreSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
   private def freshStore(): String = {
-    val path = Files.createTempDirectory("graft-manifest-").toString + "/v"
+    val path = tempDir("graft-manifest-").toString + "/v"
     (0L until 40L).map(i => (i, (i % 4).toInt))
       .toDF("id", "cell")
       .repartition(col("cell"))
@@ -68,12 +69,10 @@ class ManifestStoreSpec extends SparkSpec {
     assert(cell0.nonEmpty)
     def exists(rel: String) =
       new java.io.File(s"$path/$rel").exists()
-    // gen 2 drops cell=0 (retainGens=2): its files must SURVIVE — a
-    // reader that resolved gen 1 mid-flight still reads them
-    val m2 = StoreManifest.commitSwap(spark, path,
-      StoreManifest.read(spark, path, m1, cell0).filter(lit(false))
-        .repartition(col("cell")),
-      "cell", Set("cell=0"))
+    // gen 2 drops cell=0 (two generations retained): its files must
+    // SURVIVE — a reader that resolved gen 1 mid-flight still reads them
+    val m2 = StoreManifest.Handle(spark, path, "cell", Seq("id")).commitSwap(m1,
+      StoreManifest.read(spark, path, m1, cell0).filter(lit(false)), Seq(0))
     assert(m2.gen == 2L && m2.filesUnder(Set("cell=0")).isEmpty)
     assert(cell0.forall(exists), "replaced files survive one generation")
     // gen 3 retires gen 1 -> cell0's replaced files are reclaimed
@@ -82,6 +81,39 @@ class ManifestStoreSpec extends SparkSpec {
     assert(cell0.forall(f => !exists(f)), "retired files are reclaimed")
     // files still referenced were never touched
     assert(m3.files.forall(exists))
+  }
+
+  test("a failed staged move starts no further renames, and says where " +
+      "the already-moved files are and what reclaims them") {
+    val root = tempDir("graft-manifest-moves-")
+    val staging = root.resolve("_staging_x")
+    val moves = (0 until 40).map { i =>
+      val rel = s"cell=$i/part-$i.parquet"
+      val from = staging.resolve(rel)
+      Files.createDirectories(from.getParent)
+      Files.write(from, Array[Byte](1))
+      Files.createDirectories(root.resolve(s"cell=$i"))
+      (new Path(from.toUri), new Path(root.resolve(rel).toUri), rel)
+    }
+    val failing = moves.head._2
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    // successful moves are slow, so every move still queued behind the
+    // pool's first wave starts after the failure
+    val fs = new FilterFileSystem(
+        FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)) {
+      override def rename(src: Path, dst: Path): Boolean = {
+        calls.incrementAndGet()
+        dst != failing && { Thread.sleep(100); super.rename(src, dst) }
+      }
+    }
+    val e = intercept[IllegalStateException] {
+      StoreManifest.parallelRename(fs, moves, staging.toString)
+    }
+    assert(calls.get < moves.size,
+      s"${calls.get} of ${moves.size} renames ran despite the failure")
+    assert(e.getMessage.contains(staging.toString) &&
+      e.getMessage.contains("unpublished in live partition dirs") &&
+      e.getMessage.contains("vacuum"), e.getMessage)
   }
 
   test("vacuum deletes only unreferenced debris, never live or retained " +
@@ -228,7 +260,7 @@ class ManifestStoreSpec extends SparkSpec {
       "concurrent sweep: FileNotFound re-lists (the post-delete tree is " +
       "the truth); persistent racing degrades to an empty sweep, never a " +
       "failure of the caller's committed mutation") {
-    val dir = java.nio.file.Files.createTempDirectory("tolerant").toFile
+    val dir = tempDir("tolerant").toFile
     java.nio.file.Files.write(
       new java.io.File(dir, "a.parquet").toPath, Array[Byte](1))
     val conf = new org.apache.hadoop.conf.Configuration()
@@ -263,7 +295,7 @@ class ManifestStoreSpec extends SparkSpec {
 
   test("vacuum on a never-written store is a graceful no-op (maintenance " +
       "scheduled alongside replicate must not crash pre-first-batch)") {
-    val path = Files.createTempDirectory("graft-manifest-empty-").toString + "/v"
+    val path = tempDir("graft-manifest-empty-").toString + "/v"
     assert(StoreManifest.vacuum(spark, path) == Seq.empty)
     // and with the directory existing but manifest-less, still a no-op
     assert(new java.io.File(path).mkdirs())

@@ -142,6 +142,14 @@ class KafkaWireSpec extends SparkSpec {
     assert(t.latestOffsets.values.sum == 1)
   }
 
+  test("a CREATE frame claiming more partitions than the cap is refused " +
+      "before allocation: the client throws, the broker keeps serving") {
+    intercept[Exception] {
+      KafkaWire.withClient(broker)(_.create("w-too-wide", (1 << 16) + 1))
+    }
+    assert(EmbeddedKafka.topic(broker, "w-too-wide", 2).numPartitions == 2)
+  }
+
   test("resolve RE-VALIDATES the partition count against the broker: a " +
       "drop+recreate at a different width from elsewhere never leaves a " +
       "stale cached handle routing by the wrong count") {

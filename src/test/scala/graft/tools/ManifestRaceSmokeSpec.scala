@@ -89,7 +89,7 @@ class ManifestRaceSmokeSpec extends SparkSpec {
     val winnerBase =
       if (lines(oa).exists(_.endsWith("WIN"))) 1000L else 2000L
     val loserBase = 3000L - winnerBase
-    val h = StoreManifest.Handle(spark, path, "cell")
+    val h = StoreManifest.Handle(spark, path, "cell", Seq("id"))
     val m = h.resolve("spec")
     val ids = h.scan(m).select("id").as[Long].collect().toSet
     assert(ids.size == SeedRows + 10 &&
@@ -106,8 +106,7 @@ class ManifestRaceSmokeSpec extends SparkSpec {
       "vacuum never touches readable rows")
     // documented recovery: re-run the loser's swap — now it wins
     h.commitSwap(m2, (loserBase until loserBase + 10L).toDF("id")
-      .withColumn("cell", (col("id") % 4).cast("int"))
-      .repartition(col("cell")), Seq.empty)
+      .withColumn("cell", (col("id") % 4).cast("int")), Seq.empty)
     val after = h.scan(h.resolve("spec")).select("id").as[Long].collect().toSet
     assert(after.size == SeedRows + 20 &&
       (loserBase until loserBase + 10).forall(after))
